@@ -13,7 +13,18 @@ import graft.functions.{ArrayOps, XHash}
   * Execution shape (vs the reference's fully-materialized pandas steps):
   * C2–C8 fuse into a single scan under whole-stage codegen; the only
   * shuffles are the dedup key exchange (C13), the value-counts aggregate
-  * (C9), and the split/leakage joins (C19/C20).
+  * (C9), and one reaction-hash window for the split plus leakage move
+  * (C19/C20). Each row is computed once: there are two materialisation
+  * points, both `localCheckpoint`. [[Cleaner.clean]] checkpoints right
+  * after the dedup when rare values are counted, so the frequent-set
+  * collect and the rare filter read stored rows instead of re-running the
+  * scan and the dedup shuffle. [[Cleaner.splitWithLeakageMove]] runs one
+  * eager job that labels and stores every row, so writing train and test
+  * only scans that checkpoint. Trade-off, the same the iterative loops
+  * (Dedup, GraphOps, Similarity, TextOps) accept: checkpoint blocks live
+  * on the executors without lineage, so losing an executor fails the job
+  * instead of recomputing; Spark's ContextCleaner frees the blocks once
+  * the returned frames are unreferenced.
   */
 final case class CleanConfig(
     numReactant: Int = 5,
@@ -57,6 +68,14 @@ object Cleaner {
         part(col("yields").cast("array<string>")): _*))
   }
 
+  /** C12+C13 — seeded-shuffle keep-first dedup (drop a *random* duplicate). */
+  private def seededDedup(df: DataFrame, cfg: CleanConfig): DataFrame =
+    Relational.dedupKeepFirst(
+      df.withColumn("__dk", dedupKey(df)),
+      Seq("__dk"),
+      Seq(XHash.bucketHash(cfg.seed, col("original_index").cast("string"))))
+      .drop("__dk")
+
   /** The full operator chain C2→C18 in reference order
     * (clean/cleaner.py:533-882). */
   def clean(dfIn: DataFrame, cfg: CleanConfig): DataFrame = {
@@ -95,26 +114,21 @@ object Cleaner {
     // C8 — yield consistency
     if (cfg.consistentYield) df = CleanOps.filterYieldConsistent(df, "yields")
 
-    // C12+C13 — seeded-shuffle keep-first dedup (drop a *random* duplicate)
-    df = Relational.dedupKeepFirst(
-      df.withColumn("__dk", dedupKey(df)),
-      Seq("__dk"),
-      Seq(XHash.bucketHash(cfg.seed, col("original_index").cast("string"))))
-      .drop("__dk")
+    // C12+C13
+    df = seededDedup(df, cfg)
 
     // C9/C10/C11 — rare molecules across condition columns
     if (cfg.minFrequencyOfOccurrence > 0) {
+      // the value counts and the rare rewrite/filter both read these rows
+      df = df.localCheckpoint()
       df =
         if (cfg.mapRareMoleculesToOther)
-          CleanOps.mapRareToOtherArrays(df, conds, cfg.minFrequencyOfOccurrence)
+          // C13 again — map-to-other rewrites values, so rows can collide
+          seededDedup(
+            CleanOps.mapRareToOtherArrays(df, conds, cfg.minFrequencyOfOccurrence), cfg)
         else
+          // no re-dedup: keys are already unique and C11 only drops rows
           CleanOps.removeRareRowsArrays(df, conds, cfg.minFrequencyOfOccurrence)
-      // C13 again — dedup may be needed after map-to-other
-      df = Relational.dedupKeepFirst(
-        df.withColumn("__dk", dedupKey(df)),
-        Seq("__dk"),
-        Seq(XHash.bucketHash(cfg.seed, col("original_index").cast("string"))))
-        .drop("__dk")
     }
 
     // C15 — per-row scramble (agents keep metal-first order, products
@@ -144,15 +158,17 @@ object Cleaner {
 
   /** C19 + C20 — seeded split plus leakage move. Returns (train, test);
     * the reaction hash is the `.`-joined sorted reactants+products
-    * (clean/cleaner.py:885-945). */
+    * (clean/cleaner.py:885-945). One eager job: a single window over the
+    * reaction hash labels each row ([[Relational.leakageTrain]]), and the
+    * labelled rows are checkpointed, so both halves only scan stored rows. */
   def splitWithLeakageMove(df: DataFrame, cfg: CleanConfig): (DataFrame, DataFrame) = {
     val bucket = XHash.bucket(cfg.seed + "split", 100,
       col("original_index").cast("string"))
-    val withSplit = df.withColumn("__train", bucket < (cfg.trainSize * 100).toInt)
-    val train = withSplit.filter(col("__train")).drop("__train")
-    val test = withSplit.filter(!col("__train")).drop("__train")
     val rxnHash = md5(concat_ws(".",
       array_sort(concat(col("reactants"), col("products")))))
-    Relational.leakageMove(train, test, rxnHash)
+    val labelled = df.withColumn("__train", Relational.leakageTrain(
+      bucket < (cfg.trainSize * 100).toInt, rxnHash)).localCheckpoint()
+    (labelled.filter(col("__train")).drop("__train"),
+      labelled.filter(!col("__train")).drop("__train"))
   }
 }

@@ -48,24 +48,33 @@ object Relational {
   def splitBucket(seed: String, keys: Column*): Column =
     XHash.bucket(seed, 100, keys: _*)
 
+  /** C20 primitive — a row's train flag after the leakage move: true when
+    * the row is train itself or any row sharing its leak key is. One
+    * `max` over a window partitioned by the key, so the whole move is a
+    * single exchange on the leak key, with no distinct and no join pair.
+    * A null key never moves a row (SQL `IN` and join semantics: null
+    * matches nothing); the window alone would group all nulls together,
+    * hence the guard. */
+  def leakageTrain(isTrain: Column, leakKey: Column): Column =
+    when(leakKey.isNull, isTrain)
+      .otherwise(max(isTrain).over(Window.partitionBy(leakKey)))
+
   /** C20 — split-leakage move (ref: clean/cleaner.py:885-945: reaction-hash
     * membership in both splits moves those test rows to train; the author
     * comment flags the pandas version as the 15-minute hot spot).
     *
-    * Spark shape: a left-semi join of test against the distinct train keys
-    * finds the movers, a left-anti join keeps the rest. At 100 TB the train
-    * key set is large, so this is a shuffle hash join on the leak key (NOT a
-    * broadcast); AQE converts it to broadcast automatically when the
-    * distinct-key side is small. Replaces the O(n) python set loop with two
-    * distributed joins. Returns (train ++ movedTest, remainingTest).
+    * Spark shape: train and test are unioned with a side flag and labelled
+    * by [[leakageTrain]] — one shuffle on the leak key, replacing the O(n)
+    * python set loop. Returns (train ++ movedTest, remainingTest).
     */
   def leakageMove(train: DataFrame, test: DataFrame, leakKey: Column)
       : (DataFrame, DataFrame) = {
-    val trainKeys = train.select(leakKey.as("__lk")).distinct()
-    val t = test.withColumn("__lk", leakKey)
-    val moved = t.join(trainKeys, Seq("__lk"), "left_semi").drop("__lk")
-    val kept = t.join(trainKeys, Seq("__lk"), "left_anti").drop("__lk")
-    (train.unionByName(moved), kept)
+    val labelled = train.withColumn("__side", lit(true))
+      .unionByName(test.withColumn("__side", lit(false)))
+      .withColumn("__train", leakageTrain(col("__side"), leakKey))
+      .drop("__side")
+    (labelled.filter(col("__train")).drop("__train"),
+      labelled.filter(!col("__train")).drop("__train"))
   }
 
   /** C9 — cumulative value counts across several columns (ref:

@@ -62,7 +62,7 @@ object CleanerQueries {
 
     // C20 — split-leakage move: test rows whose leak key (o_custkey) occurs
     // in train move to train (clean/cleaner.py:885-945, the reference's
-    // 15-minute pandas hot spot → two distributed joins here).
+    // 15-minute pandas hot spot → one window on the leak key here).
     QueryDef(
       "q14_leakage_move",
       s"""WITH o AS (
