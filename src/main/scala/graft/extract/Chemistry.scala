@@ -16,15 +16,19 @@ import graft.functions.XHash
   * toolkit; a JVM cheminformatics binding would drop in here without
   * touching any operator.
   */
-trait Chemistry {
+trait Chemistry extends Serializable {
   /** Canonical form of a SMILES/name, null when unparsable. */
   def canonicalize(c: Column): Column
+  /** Scalar [[canonicalize]], for per-row Scala code such as the extract. */
+  def canonicalString(s: String): String
   /** Same, stripping atom-map numbers (extract/canonicalise.py:30-47). */
   def canonicalizeNoMaps(c: Column): Column
   /** Is this string a resolvable molecule identifier (vs a free name)? */
   def isResolvable(c: Column): Column
   /** Transition-metal presence: atomic number ∈ [22,29] ∪ [40,47] ∪ [72,79]. */
   def hasTransitionMetal(c: Column): Column
+  /** Scalar [[hasTransitionMetal]]; false for null. */
+  def containsTransitionMetal(s: String): Boolean
   /** Hashed Morgan-style fingerprint as array<int> of length nBits. */
   def fingerprint(c: Column, nBits: Int): Column
 }
@@ -36,6 +40,7 @@ trait Chemistry {
 object IdentityChemistry extends Chemistry {
 
   def canonicalize(c: Column): Column = c
+  def canonicalString(s: String): String = s
 
   /** Strip `:nn` atom maps from bracket atoms: `[CH2:1]` → `[CH2]`. */
   def canonicalizeNoMaps(c: Column): Column =
@@ -54,9 +59,18 @@ object IdentityChemistry extends Chemistry {
     "Zr", "Nb", "Mo", "Tc", "Ru", "Rh", "Pd", "Ag",
     "Hf", "Ta", "W", "Re", "Os", "Ir", "Pt", "Au")
 
+  private val tmPatterns = Seq(
+    "\\[(" + tmSymbols.mkString("|") + ")[^A-Za-z]",
+    "\\[(" + tmSymbols.mkString("|") + ")\\]")
+  private val tmRegexes = tmPatterns.map(java.util.regex.Pattern.compile)
+
   def hasTransitionMetal(c: Column): Column =
-    c.rlike("\\[(" + tmSymbols.mkString("|") + ")[^A-Za-z]") ||
-      c.rlike("\\[(" + tmSymbols.mkString("|") + ")\\]")
+    c.rlike(tmPatterns(0)) || c.rlike(tmPatterns(1))
+
+  /** The same two regexes as [[hasTransitionMetal]], matched with `find`
+    * like Spark's `rlike`. */
+  def containsTransitionMetal(s: String): Boolean =
+    s != null && tmRegexes.exists(_.matcher(s).find())
 
   /** Morgan-FP stand-in: hash the molecule string into nBits buckets from
     * its character 3-grams (substructure-ish, stable, deterministic). */
@@ -79,13 +93,11 @@ object IdentityChemistry extends Chemistry {
   * RDKit-canonical); this implementation is for fresh corpora where
   * structural unification is the semantic that matters.
   *
-  * Scale note: results memoize in a bounded per-executor cache. Molecule
-  * dictionaries are heavy-tailed (water/common solvents dominate), and
-  * Catalyst's CollapseProject re-inlines a UDF subtree into every
-  * downstream projection that references it — measured ~100× re-evaluation
-  * through the extract pipeline — so the cache turns both duplicate
-  * instances and plan-level re-evaluations into hashmap hits (extract over
-  * the golden corpus: 122 s → seconds).
+  * Scale note: results memoize in bounded per-executor caches, which serve
+  * both the scalar methods (the extract calls these once per molecule
+  * occurrence) and the Column UDFs. Molecule dictionaries are heavy-tailed
+  * (water and common solvents dominate), so most occurrences repeat a
+  * molecule already parsed and become hashmap hits.
   */
 object StructuralChemistry extends Chemistry {
   private val cacheMax = 200000
@@ -112,11 +124,9 @@ object StructuralChemistry extends Chemistry {
   @transient private lazy val tmCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
-  private val canonU = udf((s: String) => cachedCanonical(s).orNull)
-  private val canonNoMapsU = udf((s: String) =>
-    (if (s == null) None else memo(noMapsCache, s)(Smiles.canonicalNoMaps)).orNull)
-  private val resolvableU = udf((s: String) => cachedCanonical(s).isDefined)
-  private val tmU = udf((s: String) =>
+  def canonicalString(s: String): String = cachedCanonical(s).orNull
+
+  def containsTransitionMetal(s: String): Boolean =
     if (s == null) false
     else {
       val hit = tmCache.get(s)
@@ -126,7 +136,13 @@ object StructuralChemistry extends Chemistry {
         if (tmCache.size < cacheMax) tmCache.put(s, java.lang.Boolean.valueOf(r))
         r
       }
-    })
+    }
+
+  private val canonU = udf((s: String) => canonicalString(s))
+  private val canonNoMapsU = udf((s: String) =>
+    (if (s == null) None else memo(noMapsCache, s)(Smiles.canonicalNoMaps)).orNull)
+  private val resolvableU = udf((s: String) => cachedCanonical(s).isDefined)
+  private val tmU = udf((s: String) => containsTransitionMetal(s))
 
   def canonicalize(c: Column): Column = canonU(c)
   def canonicalizeNoMaps(c: Column): Column = canonNoMapsU(c)

@@ -1,20 +1,32 @@
 package graft.extract
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
+import graft.extract.OrdWire.{CompoundId, InputEntry, Product, RxnIdentifier}
 import graft.functions.{ArrayOps, Conversions}
 
-/** E1–E23 — the extraction pipeline (SURVEY.md §2.2), re-expressed as one
-  * declarative Column pipeline over the nested reaction rows produced by
-  * [[OrdSource.readNested]]. The reference walks each reaction in Python
-  * (extract/extractor.py:595-1073 `handle_reaction_object`); here every
-  * step is a higher-order array expression, so the whole extract is one
-  * narrow codegen'd projection — no shuffle at all until the sink.
+/** E1–E23 — the extraction pipeline (SURVEY.md §2.2) over the nested
+  * reaction rows produced by [[OrdSource.readNested]]. The reference walks
+  * each reaction in Python (extract/extractor.py:595-1073
+  * `handle_reaction_object`); here the list-valued steps (E1–E5, E3
+  * participation, E11, E12, E18, E19, E21, include-unadded, ice) are one
+  * compiled Scala function per reaction, applied as a typed map, and the
+  * scalar conversions (E6/E7/E9/E15/E20/E24) are Column expressions on top
+  * of it. The whole extract is one narrow stage — no shuffle at all until
+  * the sink.
   *
-  * Chemistry-dependent steps (canonicalisation) go through a [[Chemistry]]
-  * instance; with [[IdentityChemistry]] the pipeline is exact for inputs
-  * that are already canonical (the reference's own golden corpus is).
+  * Why not one Column tree: Spark's higher-order array functions
+  * (`transform`, `filter`, `exists`, …) are interpreted, not code-generated,
+  * and a per-reaction tree of them re-reads the same nested structs many
+  * times and costs more to plan than to run.
+  *
+  * Chemistry-dependent steps (canonicalisation, the transition-metal test)
+  * go through a [[Chemistry]] instance's scalar methods; with
+  * [[IdentityChemistry]] the pipeline is exact for inputs that are already
+  * canonical (the reference's own golden corpus is).
   */
 final case class ExtractConfig(
     trustLabelling: Boolean = false,
@@ -25,99 +37,103 @@ final case class ExtractConfig(
 
 object Extract {
 
+  /** The fields of one [[OrdSource.readNested]] row that the extract reads. */
+  final case class NestedReaction(
+      fileName: String, rxnOrdinal: Int,
+      identifiers: Seq[RxnIdentifier],
+      inputs: Seq[InputEntry],
+      products: Seq[Product],
+      tempValue: Option[Double], tempUnits: Int, tempControl: Int,
+      timeValue: Option[Double], timeUnits: Int,
+      procedureDetails: Option[String],
+      experimentStart: Option[String])
+
+  /** One reaction after the list-valued steps, with the raw scalar fields
+    * the Column stage still converts. `agents` is before E15. */
+  final case class ReactionLists(
+      fileName: String, rxnOrdinal: Int,
+      rxn_str: String, is_mapped: Boolean,
+      reactants: Seq[String], agents: Seq[String], solvents: Seq[String],
+      reagents: Seq[String], catalysts: Seq[String],
+      products: Seq[String], yields: Seq[Option[Double]],
+      ice: Boolean,
+      tempValue: Option[Double], tempUnits: Int, tempControl: Int,
+      timeValue: Option[Double], timeUnits: Int,
+      procedureDetails: Option[String],
+      experimentStart: Option[String])
+
+  /** Reactants, agents and products read off a reaction string (E3). */
+  final case class RxnMolecules(
+      reactants: Seq[String], agents: Seq[String], products: Seq[String])
+
+  /** Strings in UTF-8 byte order, which is code point order — the order
+    * Spark's `array_sort` uses. `String.compareTo` compares UTF-16 units
+    * and puts supplementary characters before U+E000–U+FFFF. */
+  private object Utf8Order extends Ordering[String] {
+    private def fix(c: Char): Int = if (c >= 0xe000) c - 0x800 else c + 0x2000
+    def compare(a: String, b: String): Int = {
+      val n = math.min(a.length, b.length)
+      var i = 0
+      while (i < n) {
+        val x = a.charAt(i); val y = b.charAt(i)
+        if (x != y)
+          return if (x >= '\ud800' && y >= '\ud800') fix(x) - fix(y) else x - y
+        i += 1
+      }
+      a.length - b.length
+    }
+  }
+
+  private def sortedDistinct(xs: Iterable[String]): Seq[String] =
+    xs.toArray.distinct.sorted(Utf8Order).toSeq
+
+  /** `array_except(xs, drop)`: distinct elements of `xs` not in `drop`,
+    * first-occurrence order. */
+  private def except(xs: Seq[String], drop: Seq[String]): Seq[String] =
+    xs.iterator.filterNot(drop.contains).distinct.toSeq
+
   /** Atom-mapped-molecule test: any `:n]` atom map present
     * (extract/extractor.py:244-249 uses RDKit atom map numbers; on the
     * SMILES string this is exactly the `:digits]` token). */
-  def hasMappedAtom(c: Column): Column = c.rlike(":\\d+\\]")
+  def hasMappedAtom(s: String): Boolean = {
+    var i = s.indexOf(':')
+    while (i >= 0) {
+      var j = i + 1
+      while (j < s.length && s.charAt(j) >= '0' && s.charAt(j) <= '9') j += 1
+      if (j > i + 1 && j < s.length && s.charAt(j) == ']') return true
+      i = s.indexOf(':', i + 1)
+    }
+    false
+  }
+
+  /** Spark's `split(s, "[.]")`: limit -1, so trailing empty strings stay
+    * (`String.split(regex)` alone would drop them). */
+  private def splitDots(s: String): Array[String] = s.split("\\.", -1)
+
+  /** `round(x, 2)`: HALF_UP through the decimal form, as Spark's `round`. */
+  private def round2(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else BigDecimal(x).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** E1 — first SMILES identifier of an identifier list, else (optionally)
+    * its NAME (extract/extractor.py:112-158); null when neither exists. */
+  private def idsSmiles(ids: Seq[CompoundId], allowName: Boolean): String = {
+    def first(itype: Int): String =
+      ids.find(_.itype == itype).map(_.value).orNull
+    val smiles = first(2)
+    if (smiles == null && allowName) first(6) else smiles
+  }
 
   /** E2 — reaction CXSMILES (LAST identifier of type 6 — the reference's
     * loop overwrites, extractor.py:165-168), extension stripped, exactly
-    * two `>` required (extract/extractor.py:160-180). */
-  def rxnStrCol: Column = {
-    val ident = try_element_at(
-      filter(col("identifiers"), i => i.getField("itype") === 6), lit(-1))
-    val raw = split(ident.getField("value"), " ").getItem(0)
-    when(size(split(raw, ">", -1)) === 3, raw)
-  }
-
-  /** is_mapped is false whenever no valid rxn string exists
-    * (extractor.py:683-686). */
-  def isMappedCol: Column =
-    when(rxnStrCol.isNotNull,
-      coalesce(try_element_at(
-        filter(col("identifiers"), i => i.getField("itype") === 6), lit(-1))
-        .getField("isMapped"), lit(false)))
-      .otherwise(lit(false))
-
-  /** E1 — first SMILES identifier of an identifier list, else (optionally)
-    * its NAME (extract/extractor.py:112-158). */
-  private def idsSmiles(ids: Column, allowName: Boolean): Column = {
-    val smiles = try_element_at(
-      filter(ids, i => i.getField("itype") === 2), lit(1))
-      .getField("value")
-    if (!allowName) smiles
-    else coalesce(smiles,
-      try_element_at(
-        filter(ids, i => i.getField("itype") === 6), lit(1))
-        .getField("value"))
-  }
-
-  private def compSmiles(comp: Column, allowName: Boolean): Column =
-    idsSmiles(comp.getField("ids"), allowName)
-
-  /** E4 — route input components by reaction_role into labelled lists,
-    * splitting multi-molecule SMILES on '.' (extract/extractor.py:308-375).
-    * Roles: 1=reactant 2=reagent 3=solvent 4=catalyst 8=product. */
-  def labelled(role: Int, cfg: ExtractConfig): Column = {
-    val comps = flatten(transform(col("inputs"), e => e.getField("components")))
-    val ofRole = filter(comps, c => c.getField("role") === role)
-    val smiles = transform(ofRole, c => compSmiles(c, cfg.considerMoleculeNames))
-    val nonNull = filter(smiles, s => s.isNotNull && s =!= "")
-    flatten(transform(nonNull, s => split(s, "[.]")))
-  }
-
-  /** E19 — Pd/C exception (extract/extractor.py:1024-1048): when a
-    * transition metal sits among the conditions or the procedure text
-    * mentions charcoal, bare carbon ("C"/"[C]") is the catalyst support,
-    * not an agent — drop it from the condition list. */
-  def pdCException(agents: Column, procedure: Column, chem: Chemistry): Column =
-    when(exists(agents, a => chem.hasTransitionMetal(a)) ||
-      contains(lower(coalesce(procedure, lit(""))), lit("charcoal")),
-      array_except(agents, array(lit("[C]"), lit("C"))))
-      .otherwise(agents)
-
-  /** E20 — ice defaults a missing temperature to 0 °C
-    * (extract/extractor.py:432-441 ice handling). */
-  def iceTemperature(temperature: Column, ice: Column): Column =
-    coalesce(temperature, when(ice, lit(0.0)))
-
-  /** E4 ice detection: "ice" / "ice water" NAME among inputs. */
-  def icePresent: Column = {
-    val comps = flatten(transform(col("inputs"), e => e.getField("components")))
-    exists(comps, c => exists(c.getField("ids"),
-      i => lower(i.getField("value")).isin("ice", "ice water")))
-  }
-
-  /** E5 — labelled products + aligned yields; multi-part products split on
-    * '.', longest part keeps the yield, others padded null
-    * (extract/extractor.py:377-421). A product with no resolvable
-    * identifier is skipped entirely — the reference `continue`s past it
-    * (extractor.py:400-401) — rather than contributing a null entry; the
-    * identifier lookup honours considerMoleculeNames like find_smiles. */
-  def labelledProducts(cfg: ExtractConfig): Column =
-    flatten(transform(
-      filter(col("products"),
-        p => idsSmiles(p.getField("ids"), cfg.considerMoleculeNames).isNotNull),
-      p => {
-        val first = idsSmiles(p.getField("ids"), cfg.considerMoleculeNames)
-        val parts = array_sort(
-          split(first, "[.]"),
-          (l, r) => when(length(l) > length(r), -1)
-            .when(length(l) < length(r), 1).otherwise(0))
-        transform(parts, (part, i) =>
-          struct(part.as("smiles"),
-            when(i === 0, round(p.getField("yieldPct"), 2)).as("yield")))
-      }))
+    * two `>` required (extract/extractor.py:160-180). Null otherwise. */
+  private def rxnString(ident: RxnIdentifier): String =
+    if (ident == null || ident.value == null) null
+    else {
+      val sp = ident.value.indexOf(' ')
+      val raw = if (sp < 0) ident.value else ident.value.substring(0, sp)
+      if (raw.count(_ == '>') == 2) raw else null
+    }
 
   /** E3 — participation logic over the reaction string
     * (extract/extractor.py:182-306). With is_mapped: an LHS molecule is a
@@ -129,174 +145,213 @@ object Extract {
     * WITHOUT is_mapped the reference keeps every slot as written — no
     * participation filtering, the reactant/agent partition preserved, with
     * only the [H][H] agents→reactants move (extractor.py:294-296). All
-    * outputs sorted distinct. Returns struct(reactants, agents, products).
+    * outputs sorted distinct.
     */
-  def fromRxnStr(rxnStr: Column, isMapped: Column, chem: Chemistry): Column = {
-    val parts = split(rxnStr, ">", -1)
-    def mols(i: Int): Column =
-      filter(transform(split(parts.getItem(i), "[.]"),
-        m => chem.canonicalize(m)), m => m.isNotNull && m =!= "")
-    val lhs = concat(mols(0), mols(1)) // reactants + declared agents
-    val rhsRaw = mols(2)
-    // mapped branch: participation logic
-    val mProducts = array_sort(array_distinct(
-      filter(rhsRaw, m => hasMappedAtom(m) && !array_contains(lhs, m))))
-    val mReactants = array_sort(array_distinct(filter(lhs,
-      m => (hasMappedAtom(m) || m === "[H][H]") && !array_contains(mProducts, m))))
-    val mAgents = array_sort(array_distinct(filter(lhs,
-      m => !array_contains(mReactants, m) && !array_contains(mProducts, m))))
-    // unmapped branch: everything kept as written
-    val uReactants = array_sort(array_distinct(
-      when(array_contains(mols(1), "[H][H]"),
-        concat(mols(0), array(lit("[H][H]")))).otherwise(mols(0))))
-    val uAgents = array_sort(array_distinct(array_remove(mols(1), "[H][H]")))
-    val uProducts = array_sort(array_distinct(rhsRaw))
-    struct(
-      when(isMapped, mReactants).otherwise(uReactants).as("reactants"),
-      when(isMapped, mAgents).otherwise(uAgents).as("agents"),
-      when(isMapped, mProducts).otherwise(uProducts).as("products"))
+  def fromRxnStr(rxnStr: String, isMapped: Boolean, chem: Chemistry): RxnMolecules = {
+    val parts = rxnStr.split(">", -1)
+    def mols(i: Int): Array[String] =
+      splitDots(parts(i)).map(chem.canonicalString)
+        .filter(m => m != null && m.nonEmpty)
+    val (m0, m1, rhs) = (mols(0), mols(1), mols(2))
+    if (isMapped) {
+      val lhs = m0 ++ m1 // reactants + declared agents
+      val products = sortedDistinct(
+        rhs.filter(m => hasMappedAtom(m) && !lhs.contains(m)))
+      val reactants = sortedDistinct(lhs.filter(m =>
+        (hasMappedAtom(m) || m == "[H][H]") && !products.contains(m)))
+      val agents = sortedDistinct(lhs.filter(m =>
+        !reactants.contains(m) && !products.contains(m)))
+      RxnMolecules(reactants, agents, products)
+    } else {
+      val reactants =
+        if (m1.contains("[H][H]")) m0 :+ "[H][H]" else m0
+      RxnMolecules(sortedDistinct(reactants),
+        sortedDistinct(m1.filter(_ != "[H][H]")), sortedDistinct(rhs))
+    }
   }
 
   /** E12 — merge labelled conditions into (solvents, agents): union with
     * rxn-string agents, intersect/except against the solvents dimension,
     * order agents transition-metal-first then alphabetical
     * (extract/extractor.py:545-593). */
-  def mergeToAgents(rxnAgents: Column, labelledConds: Column,
-      solventSet: Seq[String], chem: Chemistry): (Column, Column) = {
-    val all = array_distinct(concat(rxnAgents, labelledConds))
-    val solvents = array_sort(ArrayOps.intersectSet(all, solventSet))
-    val agentsRaw = array_sort(ArrayOps.exceptSet(all, solventSet))
-    // stable metal-first: sort key (not-metal, value)
-    val keyed = transform(agentsRaw, a =>
-      struct(when(chem.hasTransitionMetal(a), 0).otherwise(1).as("k"), a.as("v")))
-    val agents = transform(array_sort(keyed), s => s.getField("v"))
-    (solvents, agents)
+  def mergeToAgents(rxnAgents: Seq[String], labelledConds: Seq[String],
+      solventSet: Set[String], chem: Chemistry): (Seq[String], Seq[String]) = {
+    val all = (rxnAgents ++ labelledConds).distinct
+    val solvents = sortedDistinct(all.filter(solventSet.contains))
+    val (metals, rest) = sortedDistinct(all.filterNot(solventSet.contains))
+      .partition(chem.containsTransitionMetal)
+    (solvents, metals ++ rest)
   }
 
-  /** Full no-trust extraction (the paper's default path,
+  /** E19 — Pd/C exception (extract/extractor.py:1024-1048): when a
+    * transition metal sits among the conditions or the procedure text
+    * mentions charcoal, bare carbon ("C"/"[C]") is the catalyst support,
+    * not an agent — drop it from the condition list. */
+  def pdCException(agents: Seq[String], procedure: String,
+      chem: Chemistry): Seq[String] =
+    if (agents.exists(chem.containsTransitionMetal) ||
+      (procedure != null &&
+        procedure.toLowerCase(java.util.Locale.ROOT).contains("charcoal")))
+      except(agents, Seq("[C]", "C"))
+    else agents
+
+  /** Column form of [[pdCException]], for array columns outside the
+    * extract (the q63 registry query). */
+  def pdCException(agents: Column, procedure: Column, chem: Chemistry): Column =
+    when(exists(agents, a => chem.hasTransitionMetal(a)) ||
+      contains(lower(coalesce(procedure, lit(""))), lit("charcoal")),
+      array_except(agents, array(lit("[C]"), lit("C"))))
+      .otherwise(agents)
+
+  /** E20 — ice defaults a missing temperature to 0 °C
+    * (extract/extractor.py:432-441 ice handling). */
+  def iceTemperature(temperature: Column, ice: Column): Column =
+    coalesce(temperature, when(ice, lit(0.0)))
+
+  /** E4 ice detection: an "ice" / "ice water" identifier among the inputs.
+    * Only ASCII letters lower-case to ASCII, so other lengths never match. */
+  private def isIce(v: String): Boolean =
+    v != null && (v.length == 3 || v.length == 9) && {
+      val l = v.toLowerCase(java.util.Locale.ROOT)
+      l == "ice" || l == "ice water"
+    }
+
+  /** E21 — replacements-dict lookup with identity default
+    * (extract/extractor.py:501-516); a null replacement keeps the input. */
+  private def replace(xs: Seq[String], dict: Map[String, String]): Seq[String] =
+    if (dict.isEmpty) xs
+    else xs.map { x =>
+      val v = dict.getOrElse(x, null)
+      if (v == null) x else v
+    }
+
+  /** The list-valued steps for one reaction (the paper's default path is
     * extractor.py:689-780 branch trust_labelling=False): rxn-string
-    * reactants/products when mapped, labelled conditions merged to
-    * solvents/agents, E15/E17/E18/E19/E20/E21 cleanups applied.
-    * Output: array-typed reaction table (SURVEY.md §7.1 internal model).
+    * reactants/products when a valid string exists, labelled conditions
+    * merged to solvents/agents, E18/E19/E21 cleanups applied. None when
+    * the reaction is dropped (no reaction string and
+    * `useLabellingIfExtractFails = false`, extractor.py:734-735). */
+  def reactionLists(r: NestedReaction, cfg: ExtractConfig, chem: Chemistry,
+      solventSet: Set[String], replacements: Map[String, String]): Option[ReactionLists] = {
+    val ident = r.identifiers.reverseIterator.find(_.itype == 6).orNull
+    val rxnStr = rxnString(ident)
+    val isMapped = rxnStr != null && ident.isMapped
+    if (rxnStr == null && !cfg.trustLabelling && !cfg.useLabellingIfExtractFails)
+      return None
+
+    // E4 — input components routed by reaction_role, multi-molecule SMILES
+    // split on '.' (extractor.py:308-375). Roles: 1=reactant 2=reagent
+    // 3=solvent 4=catalyst.
+    val labelled = Array.fill(5)(ArrayBuffer.empty[String])
+    var ice = false
+    for (entry <- r.inputs; c <- entry.components) {
+      if (c.role >= 1 && c.role <= 4) {
+        val s = idsSmiles(c.ids, cfg.considerMoleculeNames)
+        if (s != null && s.nonEmpty) labelled(c.role) ++= splitDots(s)
+      }
+      if (!ice) ice = c.ids.exists(i => isIce(i.value))
+    }
+    val labReactants = labelled(1).toSeq
+    val labReagents = labelled(2).toSeq
+    val labSolvents = labelled(3).toSeq
+    val labCatalysts = labelled(4).toSeq
+
+    // E5 — labelled products + aligned yields: multi-part products split
+    // on '.', longest part (stable) keeps the yield, others get none
+    // (extractor.py:377-421). A product with no resolvable identifier is
+    // skipped entirely — the reference `continue`s past it
+    // (extractor.py:400-401).
+    val labProducts = ArrayBuffer.empty[(String, Option[Double])]
+    for (p <- r.products) {
+      val first = idsSmiles(p.ids, cfg.considerMoleculeNames)
+      if (first != null)
+        splitDots(first).sortBy(s => -s.codePointCount(0, s.length))
+          .iterator.zipWithIndex.foreach { case (part, i) =>
+            labProducts += part -> (if (i == 0) p.yieldPct.map(round2) else None)
+          }
+    }
+    val labProductSmiles = labProducts.map(_._1).toSeq
+
+    // Per-reaction branch (extractor.py:689-740): rxn-string molecules when
+    // a valid reaction string exists (and labelling is not trusted);
+    // labelled data otherwise.
+    val fromString = !cfg.trustLabelling && rxnStr != null
+    val info =
+      if (fromString) fromRxnStr(rxnStr, isMapped, chem)
+      else RxnMolecules(labReactants, Nil, labProductSmiles)
+
+    // include_unadded_labelled_molecules_as_agents (extractor.py:714-733):
+    // in the rxn-string branch, any labelled molecule (of ANY role,
+    // products included) absent from the string's reactants/agents/products
+    // joins the agents before merge_to_agents.
+    val infoAgents =
+      if (!fromString || !cfg.includeUnaddedLabelledMolecules) info.agents
+      else {
+        val added = info.reactants ++ info.agents ++ info.products
+        info.agents ++ (labReactants ++ labReagents ++ labSolvents ++
+          labCatalysts ++ labProductSmiles).distinct.filterNot(added.contains)
+      }
+
+    val reactants = replace(info.reactants, replacements)
+    val products = replace(info.products, replacements)
+    // trust_labelling keeps the labelled role split (no merge-to-agents,
+    // extractor.py:689-697: separate catalyst/reagent/solvent columns)
+    val (solvents, agents) =
+      if (cfg.trustLabelling) (labSolvents.distinct, Nil)
+      else mergeToAgents(infoAgents,
+        (labReagents ++ labSolvents ++ labCatalysts).distinct, solventSet, chem)
+    // E18 — conditions must be disjoint from reactants ∪ products
+    val taken = reactants ++ products
+    val procedure = r.procedureDetails.orNull
+
+    Some(ReactionLists(
+      r.fileName, r.rxnOrdinal, rxnStr, isMapped,
+      reactants,
+      pdCException(except(agents, taken), procedure, chem),
+      except(solvents, taken),
+      if (cfg.trustLabelling) labReagents.distinct else Nil,
+      if (cfg.trustLabelling) labCatalysts.distinct else Nil,
+      products,
+      // E11/E5 — yields re-aligned onto the final products by equality scan
+      products.map(p => labProducts.find(_._1 == p).flatMap(_._2)),
+      ice,
+      r.tempValue, r.tempUnits, r.tempControl, r.timeValue, r.timeUnits,
+      r.procedureDetails, r.experimentStart))
+  }
+
+  /** Full extraction: [[reactionLists]] per reaction, then the scalar
+    * conversions as Column expressions. Output: array-typed reaction table
+    * (SURVEY.md §7.1 internal model).
     */
   def extractReactions(nested: DataFrame, cfg: ExtractConfig,
       chem: Chemistry, solventSet: Seq[String],
       replacements: Map[String, String] = Map.empty): DataFrame = {
-
-    // Per-reaction branch (extractor.py:689-740): rxn-string-derived
-    // molecules when a valid mapped reaction string exists (and labelling
-    // is not trusted); labelled data otherwise — both for
-    // trust_labelling=true (always) and as the
-    // use_labelling_if_extract_fails fallback (the default).
-    val labelledInfo = struct(
-      labelled(1, cfg).as("reactants"),
-      array().cast("array<string>").as("agents"),
-      transform(col("lab_products"), p => p.getField("smiles"))
-        .as("products"))
-    val withRxn = nested
-      .withColumn("rxn_str", rxnStrCol)
-      .withColumn("is_mapped", isMappedCol)
-      .withColumn("lab_products", labelledProducts(cfg))
-      // use_labelling_if_extract_fails=false: a reaction with no valid rxn
-      // string is DROPPED instead of falling back to the labelled data
-      // (handle_reaction_object returns None, extractor.py:734-735)
-      .filter(
-        if (cfg.trustLabelling || cfg.useLabellingIfExtractFails) lit(true)
-        else col("rxn_str").isNotNull)
-      .withColumn("info",
-        if (cfg.trustLabelling) labelledInfo
-        else when(col("rxn_str").isNotNull,
-          fromRxnStr(col("rxn_str"), col("is_mapped"), chem))
-          .otherwise(labelledInfo))
-
-    val labelledConds = array_distinct(concat(
-      labelled(2, cfg), labelled(3, cfg), labelled(4, cfg)))
-
-    // include_unadded_labelled_molecules_as_agents (extractor.py:714-733,
-    // default true): in the rxn-string branch, any labelled molecule (of
-    // ANY role, products included) absent from the string-derived
-    // reactants/agents/products joins the agents before merge_to_agents.
-    val infoAgents: Column =
-      if (cfg.trustLabelling || !cfg.includeUnaddedLabelledMolecules)
-        col("info.agents")
-      else {
-        val allLabelled = array_distinct(concat(
-          labelled(1, cfg), labelled(2, cfg), labelled(3, cfg), labelled(4, cfg),
-          transform(col("lab_products"), p => p.getField("smiles"))))
-        val added = concat(col("info.reactants"), col("info.agents"),
-          col("info.products"))
-        when(col("rxn_str").isNotNull,
-          concat(col("info.agents"),
-            filter(allLabelled, x => !array_contains(added, x))))
-          .otherwise(col("info.agents"))
-      }
-
-    val (solv, agents) = mergeToAgents(
-      infoAgents, col("labelled_conds"), solventSet, chem)
-
-    val repl: Column => Column =
-      c => filter(transform(c, x => ArrayOps.applyReplacements(x, replacements)),
-        x => x.isNotNull)
-
-    // trust_labelling keeps the labelled role split (no merge-to-agents,
-    // extractor.py:689-697: separate catalyst/reagent/solvent columns)
-    val (solvCol, agentsCol) =
-      if (cfg.trustLabelling) (array_distinct(labelled(3, cfg)), array().cast("array<string>"))
-      else (solv, agents)
-
-    val df = withRxn
-      .withColumn("labelled_conds", labelledConds)
-      .withColumn("reactants", repl(col("info.reactants")))
-      .withColumn("products_raw", repl(col("info.products")))
-      .withColumn("reagents",
-        if (cfg.trustLabelling) array_distinct(labelled(2, cfg))
-        else array().cast("array<string>"))
-      .withColumn("catalysts",
-        if (cfg.trustLabelling) array_distinct(labelled(4, cfg))
-        else array().cast("array<string>"))
-      .withColumn("solvents", solvCol)
-      .withColumn("agents_pre", agentsCol)
-      // E18 — conditions must be disjoint from reactants ∪ products
-      .withColumn("agents_pre", array_except(col("agents_pre"),
-        concat(col("reactants"), col("products_raw"))))
-      .withColumn("solvents", array_except(col("solvents"),
-        concat(col("reactants"), col("products_raw"))))
-      // E19 — Pd/C exception: metal or charcoal present → drop bare carbon
-      .withColumn("agents_pre",
-        pdCException(col("agents_pre"), col("procedureDetails"), chem))
-      // E15 — drop numeric-string "molecules"
-      .withColumn("agents", ArrayOps.dropNumeric(col("agents_pre")))
-      // E6/E7 — unit conversions
-      .withColumn("temperature", Conversions.temperatureToCelsius(
-        col("tempValue"), col("tempUnits"), col("tempControl")))
-      // E20 — ice defaults temperature to 0°C
-      .withColumn("temperature", iceTemperature(col("temperature"), icePresent))
-      .withColumn("rxn_time", Conversions.rxnTimeToHours(
-        col("timeValue"), col("timeUnits")))
-      // E9 — experiment date
-      .withColumn("date_of_experiment",
-        Conversions.parseUsDate(col("experimentStart")))
-      // E24 — grant date from filename
-      .withColumn("grant_date", Conversions.grantDateFromFilename(col("fileName")))
-      // E11/E5 — yields re-aligned onto the final products by equality scan
-      .withColumn("yields", transform(col("products_raw"), p =>
-        try_element_at(
-          filter(col("lab_products"), lp => lp.getField("smiles") === p), lit(1))
-          .getField("yield")))
-      .withColumn("products", col("products_raw"))
+    val solvents = solventSet.toSet
+    val lists = nested.as(Encoders.product[NestedReaction])
+      .flatMap(r => reactionLists(r, cfg, chem, solvents, replacements))(
+        Encoders.product[ReactionLists])
 
     val roleCols =
-      if (cfg.trustLabelling)
-        Seq(col("reagents"), col("catalysts"))
+      if (cfg.trustLabelling) Seq(col("reagents"), col("catalysts"))
       else Seq.empty
-    df.select(Seq(
+    lists.select(Seq(
       col("fileName").as("extracted_from_file"), col("rxnOrdinal"),
-      col("rxn_str"), col("is_mapped"),
-      col("reactants"), col("agents"), col("solvents")) ++ roleCols ++ Seq(
+      col("rxn_str"), col("is_mapped"), col("reactants"),
+      // E15 — drop numeric-string "molecules"
+      ArrayOps.dropNumeric(col("agents")).as("agents"),
+      col("solvents")) ++ roleCols ++ Seq(
       col("products"), col("yields"),
-      col("temperature"), col("rxn_time"),
+      // E6/E7 — unit conversions; E20 — ice defaults temperature to 0°C
+      iceTemperature(Conversions.temperatureToCelsius(
+        col("tempValue"), col("tempUnits"), col("tempControl")), col("ice"))
+        .as("temperature"),
+      Conversions.rxnTimeToHours(col("timeValue"), col("timeUnits"))
+        .as("rxn_time"),
       col("procedureDetails").as("procedure_details"),
-      col("date_of_experiment"), col("grant_date")): _*)
+      // E9 — experiment date
+      Conversions.parseUsDate(col("experimentStart")).as("date_of_experiment"),
+      // E24 — grant date from filename
+      Conversions.grantDateFromFilename(col("fileName")).as("grant_date")): _*)
   }
 
   /** E23 — numbered-wide sink view with the reference's sentinel/column

@@ -7,10 +7,13 @@ import org.apache.spark.sql.functions._
   *
   * Reference shape: joblib process-per-file loop over `.pb.gz` files
   * (extract/main.py:613-623, extractor.py:103-110). Spark shape: the
-  * built-in `binaryFile` source lists and distributes the files (one task
-  * per file — same parallel grain as the reference, but cluster-wide and
-  * with locality), then each task gunzips + wire-decodes its datasets and
-  * flat-maps reactions. Filename filtering (S2: substring / inverse
+  * built-in `binaryFile` source lists and distributes the files
+  * cluster-wide and with locality, then each task gunzips + wire-decodes
+  * its datasets and flat-maps reactions. A task is not one file: like any
+  * file source, `binaryFile` packs files into splits of up to
+  * `maxPartitionBytes`, counting each file as at least `openCostInBytes`
+  * (4 MB), so small files share a task (16 files of ~40 KB → 4 tasks on 4
+  * cores) and a task's time follows the sizes of the files it drew. Filename filtering (S2: substring / inverse
   * substring, skip-known-duplicate) happens on the file listing via
   * `pathGlobFilter` / a path filter BEFORE any bytes are read.
   */
@@ -88,7 +91,7 @@ object OrdSource {
     * (`Trigger.AvailableNow`). State lives in `checkpointDir`, so re-running
     * after new files arrive appends ONLY their reactions — the operational
     * mode for continuous ORD ingest at scale (each micro-batch is the same
-    * narrow, shuffle-free projection as the batch path).
+    * narrow, shuffle-free map as the batch path).
     */
   def incrementalExtract(spark: SparkSession, inDir: String, outDir: String,
       checkpointDir: String, cfg: ExtractConfig, chem: Chemistry,

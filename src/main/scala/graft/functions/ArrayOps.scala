@@ -10,8 +10,10 @@ import org.apache.spark.sql.functions._
   * (`reactant_000, reactant_001, …`, extract/extractor.py:1164-1182); our
   * working representation is `ArrayType` columns, with the numbered-wide
   * layout as a sink/source codec only. All functions here are pure Column
-  * builders over Spark's higher-order array functions — codegen-friendly,
-  * no UDFs, no shuffles.
+  * builders over Spark's array functions — no UDFs, no shuffles. The
+  * higher-order ones (`transform`, `filter`, `zip_with`, …) run
+  * interpreted, not code-generated, so per-row work that chains many of
+  * them belongs in plain Scala (see [[graft.extract.Extract]]).
   */
 object ArrayOps {
 
@@ -84,12 +86,4 @@ object ArrayOps {
   def applyReplacements(c: Column, dict: Map[String, String]): Column =
     if (dict.isEmpty) c
     else coalesce(element_at(typedLit(dict), c), c)
-
-  /** E12/E18 flavor — per-row set difference against a broadcast set. */
-  def exceptSet(arr: Column, s: Seq[String]): Column =
-    array_except(arr, typedLit(s))
-
-  /** E12 — per-row set intersection against a broadcast set. */
-  def intersectSet(arr: Column, s: Seq[String]): Column =
-    array_intersect(arr, typedLit(s))
 }

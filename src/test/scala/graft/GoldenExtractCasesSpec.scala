@@ -83,17 +83,15 @@ class GoldenExtractCasesSpec extends SparkSpec {
   )
 
   test("E3 participation: mapped vs unmapped branches (extractor.py:244-296)") {
-    val df = Seq(
+    val out = Seq(
       // mapped: unmapped LHS mol demotes to agents; [H][H] stays reactant
       (true, "[CH3:1]O.CC(=O)O.[H][H]>[Pd]>[CH3:1]OC"),
       // unmapped: EVERYTHING kept as written, partition preserved
       (false, "CO.CC(=O)O>[Pd].[H][H]>COC")
-    ).toDF("m", "rxn")
-    val out = df.select(col("m"),
-      Extract.fromRxnStr(col("rxn"), col("m"), IdentityChemistry).as("i"))
-      .select(col("m"), col("i.reactants"), col("i.agents"), col("i.products"))
-      .as[(Boolean, Seq[String], Seq[String], Seq[String])]
-      .collect().map(r => r._1 -> (r._2, r._3, r._4)).toMap
+    ).map { case (m, rxn) =>
+      val i = Extract.fromRxnStr(rxn, m, IdentityChemistry)
+      m -> ((i.reactants, i.agents, i.products))
+    }.toMap
     // mapped: CC(=O)O has no atom map -> agent; [CH3:1]OC mapped+not LHS -> product
     assert(out(true) == ((Seq("[CH3:1]O", "[H][H]"), Seq("CC(=O)O", "[Pd]"),
       Seq("[CH3:1]OC"))))
@@ -119,12 +117,8 @@ class GoldenExtractCasesSpec extends SparkSpec {
   mergeCases.zipWithIndex.foreach { case ((rxnAgents, cats, solvs, reags,
       wantAgents, wantSolvents), i) =>
     test(s"E12 merge_to_agents golden case $i") {
-      val df = Seq((rxnAgents, cats ++ solvs ++ reags))
-        .toDF("rxn_agents", "labelled_conds")
-      val (solvCol, agentCol) = Extract.mergeToAgents(
-        col("rxn_agents"), col("labelled_conds"), solventSet, IdentityChemistry)
-      val got = df.select(solvCol.as("s"), agentCol.as("a"))
-        .as[(Seq[String], Seq[String])].collect()(0)
+      val got = Extract.mergeToAgents(rxnAgents, cats ++ solvs ++ reags,
+        solventSet.toSet, IdentityChemistry)
       assert(got._2 == wantAgents, s"agents: got ${got._2} want $wantAgents")
       assert(got._1 == wantSolvents, s"solvents: got ${got._1} want $wantSolvents")
     }
