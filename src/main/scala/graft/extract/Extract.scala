@@ -95,7 +95,7 @@ object Extract {
   /** Atom-mapped-molecule test: any `:n]` atom map present
     * (extract/extractor.py:244-249 uses RDKit atom map numbers; on the
     * SMILES string this is exactly the `:digits]` token). */
-  def hasMappedAtom(s: String): Boolean = {
+  private def hasMappedAtom(s: String): Boolean = {
     var i = s.indexOf(':')
     while (i >= 0) {
       var j = i + 1

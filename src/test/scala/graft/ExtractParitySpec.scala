@@ -2,10 +2,11 @@ package graft
 
 import scala.util.Random
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.extract._
 import graft.extract.OrdWire._
@@ -153,9 +154,10 @@ class ExtractParitySpec extends SparkSpec {
     }
   }
 
-  /** In-memory rows in [[OrdSource.readNested]]'s shape. */
-  private def nestedOf(rs: Seq[OrdSource.OrdFileReaction]): DataFrame =
-    rs.toDS().toDF().select(col("fileName"), col("rxnOrdinal"), col("r.*"))
+  /** Rows in [[OrdSource.readNested]]'s shape. */
+  private def nestedOf(rs: Dataset[OrdSource.OrdFileReaction]): DataFrame =
+    rs.toDF().select(col("fileName"), col("rxnOrdinal"), col("r.*"))
+  private def nestedOf(rs: Seq[OrdSource.OrdFileReaction]): DataFrame = nestedOf(rs.toDS())
 
   private lazy val nested = nestedOf(handMade ++ randomReactions(400, 7L)).cache()
 
@@ -211,6 +213,22 @@ class ExtractParitySpec extends SparkSpec {
     assert(out("f1" -> 8).getAs[Double]("temperature") == 0.0)
     assert(arr(out("f1" -> 9), "reactants") == Seq("ZZ", "Z\uE000", "Z\uD835\uDC00"))
     assert(arr(out("f1" -> 1), "agents") == Seq("[Pd]"))
+  }
+
+  test("a streaming nested frame takes the same per-reaction path") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sq = spark.sqlContext
+    val mem = MemoryStream[OrdSource.OrdFileReaction]
+    mem.addData(handMade: _*)
+    val q = Extract.extractReactions(nestedOf(mem.toDS()), ExtractConfig(),
+      IdentityChemistry, solvents)
+      .writeStream.format("memory").queryName("spec_extract_stream")
+      .outputMode(OutputMode.Append).start()
+    q.processAllAvailable()
+    q.stop()
+    val batch = Extract.extractReactions(nestedOf(handMade), ExtractConfig(),
+      IdentityChemistry, solvents)
+    assert(rows(spark.table("spec_extract_stream")) == rows(batch))
   }
 
   test("scalar chemistry methods agree with the Column forms") {
