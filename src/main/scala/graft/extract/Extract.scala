@@ -302,12 +302,11 @@ object Extract {
         (labReagents ++ labSolvents ++ labCatalysts).distinct, solventSet, chem)
     // E18 — conditions must be disjoint from reactants ∪ products
     val taken = reactants ++ products
-    val procedure = r.procedureDetails.orNull
 
     Some(ReactionLists(
       r.fileName, r.rxnOrdinal, rxnStr, isMapped,
       reactants,
-      pdCException(except(agents, taken), procedure, chem),
+      pdCException(except(agents, taken), r.procedureDetails.orNull, chem),
       except(solvents, taken),
       if (cfg.trustLabelling) labReagents.distinct else Nil,
       if (cfg.trustLabelling) labCatalysts.distinct else Nil,
