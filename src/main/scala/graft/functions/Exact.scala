@@ -73,6 +73,28 @@ object XHash {
   def bucketSql(seed: String, n: Int, keyExprs: String*): String =
     s"(${bucketHashSql(seed, keyExprs: _*)} % $n)"
 
+  /** Spark's `md5(s)` on the JVM: the lowercase hex digest of the UTF-8
+    * bytes. */
+  def md5Hex(s: String): String = {
+    val d = md5(s)
+    val out = new Array[Char](32)
+    var i = 0
+    while (i < 16) {
+      out(2 * i) = hexDigits((d(i) >> 4) & 0xf)
+      out(2 * i + 1) = hexDigits(d(i) & 0xf)
+      i += 1
+    }
+    new String(out)
+  }
+
+  /** The MD5 digest of the UTF-8 bytes of `s`. */
+  def md5(s: String): Array[Byte] =
+    digest.get().digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  private val hexDigits = "0123456789abcdef".toCharArray
+  private val digest = ThreadLocal.withInitial[java.security.MessageDigest](
+    () => java.security.MessageDigest.getInstance("MD5"))
+
   /** Driver-side evaluation of [[bucketHash]] for CONSTANT keys — lets
     * operators embed derived pseudo-random constants (LSH plane weights,
     * minhash masks) as literals instead of re-hashing per row. */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.functions.{ArrayOps, Conversions}
-import graft.operators.CleanOps
+import graft.operators.{CleanOps, ReactionTable, Relational}
 
 /** Unit tests for the cleaning-stage operators over toy frames — the Scala
   * port of the reference's cleaner unit tests
@@ -15,106 +15,120 @@ class CleanOpsSpec extends SparkSpec {
   import spark.implicits._
 
   // Toy reaction frame: (reactants, agents, solvents, products, yields, is_mapped)
-  private def toy = Seq(
+  private val toyRows = Seq(
     (Seq("A", "B"), Seq("cat1"), Seq("s1", "s2"), Seq("P1"), Seq(Some(90.0)), true),
     (Seq("A", "bad"), Seq("cat1"), Seq("s1"), Seq("P2"), Seq(Some(50.0)), true),
     (Seq("C", "bad"), Seq("cat2"), Seq("s2"), Seq("P3"), Seq(Some(10.0)), false),
     (Seq("C"), Seq(), Seq(), Seq("C"), Seq(None: Option[Double]), false)
-  ).toDF("reactants", "agents", "solvents", "products", "yields", "is_mapped")
+  )
+  private def toy =
+    toyRows.toDF("reactants", "agents", "solvents", "products", "yields", "is_mapped")
+
+  /** Each toy row's component lists, in `comps` order, with its mapped flag. */
+  private val toyLists = toyRows.map { case (r, a, s, p, _, m) => (Seq(r, a, s, p), m) }
 
   private val comps = Seq("reactants", "agents", "solvents", "products")
 
+  private def badNames(mode: CleanOps.BadNameMode) =
+    toyLists.flatMap { case (ls, m) =>
+      CleanOps.handleBadNames(ls, m, Set("bad"), mode).map(_ -> m) }
+
   test("C2 NullifyIfMapped: mapped rows stripped, unmapped bad rows deleted") {
-    val out = CleanOps.handleBadNames(toy, comps, Seq("bad"), CleanOps.NullifyIfMapped)
-    val rows = out.select("reactants", "is_mapped").collect()
+    val rows = badNames(CleanOps.NullifyIfMapped)
     assert(rows.length == 3) // row 3 (unmapped, has bad) deleted
-    val mapped = rows.filter(_.getBoolean(1)).map(_.getSeq[String](0).toList).toSet
+    val mapped = rows.filter(_._2).map(_._1.head.toList).toSet
     assert(mapped == Set(List("A", "B"), List("A"))) // "bad" removed from mapped row
   }
 
   test("C2 DeleteAll / NullAll") {
-    assert(CleanOps.handleBadNames(toy, comps, Seq("bad"), CleanOps.DeleteAll).count() == 2)
-    val na = CleanOps.handleBadNames(toy, comps, Seq("bad"), CleanOps.NullAll)
-    assert(na.count() == 4)
-    assert(!na.select("reactants").as[Seq[String]].collect().exists(_.contains("bad")))
+    assert(badNames(CleanOps.DeleteAll).length == 2)
+    val na = badNames(CleanOps.NullAll)
+    assert(na.length == 4)
+    assert(!na.exists(_._1.head.contains("bad")))
   }
 
   test("C3 catalyst overflow renames into reagents") {
-    val df = Seq((Seq("c1", "c2", "c3"), Seq("r1")))
-      .toDF("catalysts", "reagents")
-    val out = CleanOps.renameCatalystOverflow(df, 1).collect()(0)
-    assert(out.getSeq[String](0) == Seq("c1"))
-    assert(out.getSeq[String](1) == Seq("r1", "c2", "c3"))
+    val (cats, reags) = CleanOps.catalystOverflow(Seq("c1", "c2", "c3"), Seq("r1"), 1)
+    assert(cats == Seq("c1"))
+    assert(reags == Seq("r1", "c2", "c3"))
   }
 
   test("C4 trim keeps rows within width; k=-1 keeps all") {
-    assert(CleanOps.trimComponents(toy, "reactants", 1).count() == 1)
-    assert(CleanOps.trimComponents(toy, "reactants", -1).count() == 4)
+    assert(toyRows.count(r => CleanOps.withinWidth(r._1, 1)) == 1)
+    assert(toyRows.count(r => CleanOps.withinWidth(r._1, -1)) == 4)
   }
 
   test("C5/C6 emptiness filters") {
-    assert(CleanOps.requireNonEmpty(toy, "agents").count() == 3)
-    assert(CleanOps.requireAnyCondition(toy, Seq("agents", "solvents")).count() == 3)
+    assert(toyRows.count(r => CleanOps.nonEmpty(r._2)) == 3)
+    assert(toyRows.count(r => CleanOps.anyCondition(Seq(r._2, r._3))) == 3)
   }
 
   test("C7 drops rows where reactant set == product set") {
-    val out = CleanOps.dropNoopReactions(toy)
-    assert(out.count() == 3) // row 4: C -> C is a no-op
+    assert(toyRows.count(r => !CleanOps.isNoop(r._1, r._4)) == 3) // row 4: C -> C is a no-op
   }
 
   test("C8 yield consistency") {
-    val df = Seq(
+    val rows = Seq(
       (1, Seq(Some(50.0), Some(40.0))),   // ok
       (2, Seq(Some(60.0), Some(60.0))),   // sum > 100
       (3, Seq(Some(-5.0))),               // out of range
       (4, Seq(None: Option[Double]))      // null ok
-    ).toDF("id", "yields")
-    val kept = CleanOps.filterYieldConsistent(df).select("id").as[Int].collect().toSet
+    )
+    val kept = rows.filter(r => CleanOps.yieldConsistent(r._2.map(_.orNull))).map(_._1).toSet
     assert(kept == Set(1, 4))
   }
+
+  /** The frequent set of the toy's agents and solvents at count ≥ 2. */
+  private def frequent(df: org.apache.spark.sql.DataFrame, cols: Seq[String]): Set[String] =
+    CleanOps.frequentValues(df, cols, 2).get
 
   test("C9/C10/C11 over arrays: counts, rare->other, rare-row removal") {
     val vc = CleanOps.valueCountsArrays(toy, Seq("agents", "solvents"))
       .as[(String, Long)].collect().toMap
     assert(vc == Map("cat1" -> 2, "cat2" -> 1, "s1" -> 2, "s2" -> 2))
 
-    val mapped = CleanOps.mapRareToOtherArrays(toy, Seq("agents", "solvents"), 2)
-    val ags = mapped.select("agents").as[Seq[String]].collect().flatten
+    val fs = frequent(toy, Seq("agents", "solvents"))
+    val ags = toyRows.flatMap(r => CleanOps.rareToOther(r._2, fs))
     assert(ags.count(_ == "other") == 1 && !ags.contains("cat2"))
 
-    assert(CleanOps.removeRareRowsArrays(toy, Seq("agents", "solvents"), 2).count() == 3)
+    assert(toyRows.count(r => !CleanOps.hasRare(r._2, fs) && !CleanOps.hasRare(r._3, fs)) == 3)
   }
 
   test("C10/C11 join-path fallback matches the literal-set path") {
-    // maxLiteralSet = 0 forces the fully-distributed join form
+    // the join form against the scalar functions over the collected set
     val keyed = toy.withColumn("original_index",
       row_number().over(org.apache.spark.sql.expressions.Window
         .orderBy("reactants")).cast("long"))
     val cols = Seq("agents", "solvents")
+    val fs = frequent(keyed, cols)
     def norm(df: org.apache.spark.sql.DataFrame) =
       df.select("original_index", "agents", "solvents")
         .as[(Long, Seq[String], Seq[String])].collect().sortBy(_._1).toSeq
+    val rows = norm(keyed)
 
-    assert(norm(CleanOps.mapRareToOtherArrays(keyed, cols, 2, maxLiteralSet = 0))
-      == norm(CleanOps.mapRareToOtherArrays(keyed, cols, 2)))
-    assert(norm(CleanOps.removeRareRowsArrays(keyed, cols, 2, maxLiteralSet = 0))
-      == norm(CleanOps.removeRareRowsArrays(keyed, cols, 2)))
+    assert(norm(Relational.mapRareToOtherArraysJoin(keyed, cols, 2, "original_index"))
+      == rows.map { case (i, a, s) => (i, CleanOps.rareToOther(a, fs), CleanOps.rareToOther(s, fs)) })
+    assert(norm(Relational.removeRareRowsArraysJoin(keyed, cols, 2, "original_index"))
+      == rows.filterNot { case (_, a, s) => CleanOps.hasRare(a, fs) || CleanOps.hasRare(s, fs) })
   }
 
   test("C11 null-array rows: kept unless a sibling column is rare, both paths") {
     // "a" is frequent (3 uses), "rare" appears once
-    val df = Seq(
+    val rows = Seq(
       (1L, Some(Seq("a")), Some(Seq("a"))),
       (2L, None: Option[Seq[String]], Some(Seq("a"))), // null list, no rare → keep
       (3L, None: Option[Seq[String]], Some(Seq("rare"))), // null list, rare sibling → drop
       (4L, Some(Seq("a")), None: Option[Seq[String]]) // keep
-    ).toDF("original_index", "agents", "solvents")
+    )
+    val df = rows.toDF("original_index", "agents", "solvents")
     val cols = Seq("agents", "solvents")
-    def kept(maxLit: Int) =
-      CleanOps.removeRareRowsArrays(df, cols, 2, maxLiteralSet = maxLit)
-        .select("original_index").as[Long].collect().sorted.toSeq
-    assert(kept(100) == Seq(1L, 2L, 4L)) // literal path
-    assert(kept(0) == Seq(1L, 2L, 4L)) // join path
+    val fs = frequent(df, cols)
+    val scalar = rows.filterNot { case (_, a, s) =>
+      CleanOps.hasRare(a.orNull, fs) || CleanOps.hasRare(s.orNull, fs) }.map(_._1)
+    assert(scalar == Seq(1L, 2L, 4L)) // literal path
+    val join = Relational.removeRareRowsArraysJoin(df, cols, 2, "original_index")
+      .select("original_index").as[Long].collect().sorted.toSeq
+    assert(join == Seq(1L, 2L, 4L)) // join path
   }
 
   test("E16 aligned filter co-drops yields with products") {
@@ -142,22 +156,23 @@ class CleanOpsSpec extends SparkSpec {
       .as[Seq[Option[String]]].collect()(0)
     assert(padded == Seq(Some("a"), Some("b"), None, None))
 
-    val wide = df.select(ArrayOps.toWide(col("l"), "c", 3): _*)
-    assert(wide.columns.toSeq == Seq("c_000", "c_001", "c_002"))
+    val wide = df.select(ArrayOps.toWide(col("l"), "reactant", 3): _*)
+    assert(wide.columns.toSeq == Seq("reactant_000", "reactant_001", "reactant_002"))
     assert(wide.collect()(0).toSeq == Seq("a", "b", "<missing>"))
-    val back = wide.select(ArrayOps.fromWide(
-      Seq(col("c_000"), col("c_001"), col("c_002"))).as("l"))
+    val back = ReactionTable.fromWide(spark, wide).select("reactants")
       .as[Seq[String]].collect()(0)
     assert(back == Seq("a", "b"))
   }
 
   test("C15 scramble is a deterministic permutation") {
-    val df = Seq((1L, Seq("a", "b", "c", "d", "e"))).toDF("id", "l")
-    val s1 = df.select(ArrayOps.scramble(col("l"), "seed", col("id")).as("s"))
-      .as[Seq[String]].collect()(0)
-    val s2 = df.select(ArrayOps.scramble(col("l"), "seed", col("id")).as("s"))
-      .as[Seq[String]].collect()(0)
+    val l = Seq("a", "b", "c", "d", "e")
+    val s1 = ArrayOps.scramble(l, "seed", "1")
+    val s2 = ArrayOps.scramble(l, "seed", "1")
     assert(s1 == s2 && s1.sorted == Seq("a", "b", "c", "d", "e") && s1 != Seq("a", "b", "c", "d", "e"))
+    // the registry's Column form wraps the same function
+    val df = Seq((1L, l)).toDF("id", "l")
+    assert(df.select(ArrayOps.scramble(col("l"), "seed", col("id")))
+      .as[Seq[String]].collect()(0) == s1)
   }
 
   test("E15 numeric strings dropped") {
