@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{ArrayOps, XHash}
@@ -161,14 +161,6 @@ object CleanOps {
       val scrambled = ArrayOps.scrambleOrder(p, seed, rowKey).map(p)
       (scrambled, ArrayOps.scrambleOrder(scrambled, seed, rowKey).map(y))
     }
-
-  /** C19/C20 reaction hash (clean/cleaner.py:885-945): md5 hex of the
-    * `.`-joined reactants and products in UTF-8 order, null elements
-    * skipped; a null list hashes the empty string. */
-  def reactionHash(reactants: Seq[String], products: Seq[String]): String =
-    XHash.md5Hex(
-      if (reactants == null || products == null) ""
-      else (reactants ++ products).filter(_ != null).sorted(ArrayOps.Utf8Order).mkString("."))
 
   /** C9 over array columns — value counts across all component families:
     * one flatten+explode into a single hash aggregate (map-side partial,

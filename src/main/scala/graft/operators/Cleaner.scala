@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.collection.{immutable, mutable}
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.catalyst.expressions.{Alias, GenericRow, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -254,18 +254,22 @@ object Cleaner {
       df.columns.filterNot(_ == "original_index").sorted.map(col): _*)
   }
 
-  /** C19 + C20 — seeded split plus leakage move. Returns (train, test);
-    * the reaction hash is [[CleanOps.reactionHash]]
-    * (clean/cleaner.py:885-945). One eager job: a single window over the
-    * reaction hash labels each row ([[Relational.leakageTrain]]), and the
-    * labelled rows are checkpointed, so both halves only scan stored rows. */
+  /** C19/C20 reaction hash (clean/cleaner.py:885-945): md5 of the
+    * `.`-joined sorted reactants and products. `sort_array` is
+    * code-generated, unlike the higher-order `array_sort`; where it puts
+    * nulls does not matter, since `concat_ws` skips them. */
+  def reactionHash: Column =
+    md5(concat_ws(".", sort_array(concat(col("reactants"), col("products")))))
+
+  /** C19 + C20 — seeded split plus leakage move. Returns (train, test).
+    * One eager job: a single window over the [[reactionHash]] labels each
+    * row ([[Relational.leakageTrain]]), and the labelled rows are
+    * checkpointed, so both halves only scan stored rows. */
   def splitWithLeakageMove(df: DataFrame, cfg: CleanConfig): (DataFrame, DataFrame) = {
     val bucket = XHash.bucket(cfg.seed + "split", 100,
       col("original_index").cast("string"))
-    val rxnHash = udf((r: Seq[String], p: Seq[String]) => CleanOps.reactionHash(r, p))
-      .apply(col("reactants"), col("products"))
     val labelled = df.withColumn("__train", Relational.leakageTrain(
-      bucket < (cfg.trainSize * 100).toInt, rxnHash)).localCheckpoint()
+      bucket < (cfg.trainSize * 100).toInt, reactionHash)).localCheckpoint()
     (labelled.filter(col("__train")).drop("__train"),
       labelled.filter(!col("__train")).drop("__train"))
   }

@@ -35,7 +35,8 @@ import graft.operators._
   *  - `cast(array<double> as array<string>)` formats each yield with
   *    `Double.toString` ("1.0E-5", "1.2345678E7", "-0.0", "NaN").
   *  - `array_sort` orders strings by UTF-8 bytes (code point order) and
-  *    puts nulls last; the reaction hash then drops them in `concat_ws`.
+  *    puts nulls last, `sort_array` first; the reaction hash drops them
+  *    in `concat_ws`, so the two sorts give the same hash.
   *  - `md5` gives lowercase hex, and the scramble sorts by that hex.
   *  - `original_index.cast("string")` is the decimal `Long.toString`.
   *  - Under ANSI mode `size(null)` is null, so a null list fails every
@@ -277,12 +278,12 @@ class CleanerParitySpec extends SparkSpec with AdaptiveSparkPlanHelper {
       val raw = LegacyColumnClean.load(dir)
       val lists = Seq("reactants", "products", "agents", "reagents", "solvents", "catalysts")
       val got = raw.select(Seq(LegacyColumnClean.dedupKey(raw), LegacyColumnClean.rxnHash,
-          col("yields")) ++ lists.map(col): _*).collect()
+          Cleaner.reactionHash, col("yields")) ++ lists.map(col): _*).collect()
       assert(got.length > 300)
       got.foreach { r =>
-        val ls = lists.indices.map(i => r.getSeq[String](3 + i))
-        assert(r.getString(0) == CleanOps.dedupKey(ls, r.getSeq[Any](2)), r)
-        assert(r.getString(1) == CleanOps.reactionHash(ls(0), ls(1)), r)
+        val ls = lists.indices.map(i => r.getSeq[String](4 + i))
+        assert(r.getString(0) == CleanOps.dedupKey(ls, r.getSeq[Any](3)), r)
+        assert(r.getString(1) == r.getString(2), r)
       }
     }
   }
