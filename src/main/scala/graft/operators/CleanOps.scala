@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.{ArrayOps, XHash}
 
 /** The reference's cleaning-stage steps (SURVEY.md §2.3,
-  * /root/reference/orderly/clean/cleaner.py) over an array-typed reaction
+  * orderly/clean/cleaner.py) over an array-typed reaction
   * table: each component family (`reactants`, `agents`, `reagents`,
   * `solvents`, `catalysts`, `products`) is one `array<string>` column,
   * `yields` is `array<double>` positionally aligned with `products`
