@@ -29,8 +29,10 @@ object CliUtil {
   }
 }
 
-/** `orderly.extract` equivalent: ORD .pb.gz directory → per-source parquet
-  * (array-typed + wide flavours) + unresolved-names CSV + config audit. */
+/** `orderly.extract` equivalent: ORD .pb.gz directory → array-typed parquet
+  * partitioned by source file, plus the config audit. It extracts with
+  * [[IdentityChemistry]] and the solvent set `O`, `CO`, `CCO`; it writes
+  * neither the reference's wide layout nor its unresolved-names CSV. */
 object ExtractMain {
   def main(args: Array[String]): Unit = {
     val Array(ordDir, outDir) = args.take(2)

@@ -10,46 +10,38 @@ import graft.functions.XHash
   * All non-relational chemistry (SMILES canonicalisation via RDKit
   * round-trip, extract/canonicalise.py:12-72; transition-metal test,
   * extract/defaults.py:10-39; Morgan fingerprints, gen_fp/fingerprints.py:
-  * 76-99) sits behind this trait. The engine ships [[IdentityChemistry]]
-  * — treats strings as already-canonical, fingerprints by stable hash —
-  * which makes the whole relational pipeline testable without a chem
-  * toolkit; a JVM cheminformatics binding would drop in here without
-  * touching any operator.
+  * 76-99) sits behind these three functions. The engine ships
+  * [[IdentityChemistry]] — treats strings as already-canonical,
+  * fingerprints by stable hash — which makes the whole relational pipeline
+  * testable without a chem toolkit; a JVM cheminformatics binding would
+  * drop in here without touching any operator.
+  *
+  * The two molecule tests are scalars: the extract calls them once per
+  * molecule inside its per-reaction function, and a caller that needs a
+  * Column wraps the scalar in a UDF at its call site
+  * ([[graft.operators.Dimensions.loadSolvents]], the q63 form of
+  * [[Extract.pdCException]]). The fingerprint stays a Column form:
+  * [[IdentityChemistry]]'s 3-gram Column kernel is the independent oracle
+  * the scalar kernel of [[graft.operators.Fingerprints.reactionFingerprintsDense]]
+  * is checked against.
   */
 trait Chemistry extends Serializable {
   /** Canonical form of a SMILES/name, null when unparsable. */
-  def canonicalize(c: Column): Column
-  /** Scalar [[canonicalize]], for per-row Scala code such as the extract. */
   def canonicalString(s: String): String
-  /** Same, stripping atom-map numbers (extract/canonicalise.py:30-47). */
-  def canonicalizeNoMaps(c: Column): Column
-  /** Is this string a resolvable molecule identifier (vs a free name)? */
-  def isResolvable(c: Column): Column
-  /** Transition-metal presence: atomic number ∈ [22,29] ∪ [40,47] ∪ [72,79]. */
-  def hasTransitionMetal(c: Column): Column
-  /** Scalar [[hasTransitionMetal]]; false for null. */
+  /** Transition-metal presence: atomic number ∈ [22,29] ∪ [40,47] ∪ [72,79];
+    * false for null. */
   def containsTransitionMetal(s: String): Boolean
   /** Hashed Morgan-style fingerprint as array<int> of length nBits. */
   def fingerprint(c: Column, nBits: Int): Column
 }
 
-/** Engine-testable chemistry: pure Column expressions, no external toolkit.
+/** Engine-testable chemistry: no external toolkit.
   * Canonical = input (golden extracted data is already RDKit-canonical, so
   * cleaner-stage parity holds — SURVEY.md §7.4.1).
   */
 object IdentityChemistry extends Chemistry {
 
-  def canonicalize(c: Column): Column = c
   def canonicalString(s: String): String = s
-
-  /** Strip `:nn` atom maps from bracket atoms: `[CH2:1]` → `[CH2]`. */
-  def canonicalizeNoMaps(c: Column): Column =
-    regexp_replace(c, ":\\d+\\]", "]")
-
-  /** SMILES-shaped heuristic: non-empty and contains no whitespace and only
-    * SMILES alphabet characters. Free-text names ("sodium chloride") fail. */
-  def isResolvable(c: Column): Column =
-    c.isNotNull && c.rlike("^[A-Za-z0-9@+\\-\\[\\]\\(\\)=#$:./\\\\%*{}]+$")
 
   /** Bracket-atom regex over the transition-metal element symbols — exact
     * for the bracket forms the sort key consumes (extract/defaults.py:10-39:
@@ -59,16 +51,12 @@ object IdentityChemistry extends Chemistry {
     "Zr", "Nb", "Mo", "Tc", "Ru", "Rh", "Pd", "Ag",
     "Hf", "Ta", "W", "Re", "Os", "Ir", "Pt", "Au")
 
-  private val tmPatterns = Seq(
+  private val tmRegexes = Seq(
     "\\[(" + tmSymbols.mkString("|") + ")[^A-Za-z]",
     "\\[(" + tmSymbols.mkString("|") + ")\\]")
-  private val tmRegexes = tmPatterns.map(java.util.regex.Pattern.compile)
+    .map(java.util.regex.Pattern.compile)
 
-  def hasTransitionMetal(c: Column): Column =
-    c.rlike(tmPatterns(0)) || c.rlike(tmPatterns(1))
-
-  /** The same two regexes as [[hasTransitionMetal]], matched with `find`
-    * like Spark's `rlike`. */
+  /** Either bracket-atom regex found anywhere in the string. */
   def containsTransitionMetal(s: String): Boolean =
     s != null && tmRegexes.exists(_.matcher(s).find())
 
@@ -93,38 +81,30 @@ object IdentityChemistry extends Chemistry {
   * RDKit-canonical); this implementation is for fresh corpora where
   * structural unification is the semantic that matters.
   *
-  * Scale note: results memoize in bounded per-executor caches, which serve
-  * both the scalar methods (the extract calls these once per molecule
-  * occurrence) and the Column UDFs. Molecule dictionaries are heavy-tailed
-  * (water and common solvents dominate), so most occurrences repeat a
-  * molecule already parsed and become hashmap hits.
+  * Scale note: the two scalars memoize in bounded per-executor caches (the
+  * extract calls them once per molecule occurrence). Molecule dictionaries
+  * are heavy-tailed (water and common solvents dominate), so most
+  * occurrences repeat a molecule already parsed and become hashmap hits.
   */
 object StructuralChemistry extends Chemistry {
   private val cacheMax = 200000
   // per-JVM (per-executor) caches; "" marks a None result
   @transient private lazy val canonCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
-  @transient private lazy val noMapsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def memo(cache: java.util.concurrent.ConcurrentHashMap[String, String],
-      s: String)(compute: String => Option[String]): Option[String] = {
-    val hit = cache.get(s)
-    if (hit != null) { if (hit.isEmpty) None else Some(hit) }
-    else {
-      val r = compute(s)
-      if (cache.size < cacheMax) cache.put(s, r.getOrElse(""))
-      r
-    }
-  }
-
-  private def cachedCanonical(s: String): Option[String] =
-    if (s == null) None else memo(canonCache, s)(Smiles.canonical)
-
   @transient private lazy val tmCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
-  def canonicalString(s: String): String = cachedCanonical(s).orNull
+  def canonicalString(s: String): String =
+    if (s == null) null
+    else {
+      val hit = canonCache.get(s)
+      if (hit != null) { if (hit.isEmpty) null else hit }
+      else {
+        val r = Smiles.canonical(s).orNull
+        if (canonCache.size < cacheMax) canonCache.put(s, if (r == null) "" else r)
+        r
+      }
+    }
 
   def containsTransitionMetal(s: String): Boolean =
     if (s == null) false
@@ -137,17 +117,6 @@ object StructuralChemistry extends Chemistry {
         r
       }
     }
-
-  private val canonU = udf((s: String) => canonicalString(s))
-  private val canonNoMapsU = udf((s: String) =>
-    (if (s == null) None else memo(noMapsCache, s)(Smiles.canonicalNoMaps)).orNull)
-  private val resolvableU = udf((s: String) => cachedCanonical(s).isDefined)
-  private val tmU = udf((s: String) => containsTransitionMetal(s))
-
-  def canonicalize(c: Column): Column = canonU(c)
-  def canonicalizeNoMaps(c: Column): Column = canonNoMapsU(c)
-  def isResolvable(c: Column): Column = resolvableU(c)
-  def hasTransitionMetal(c: Column): Column = tmU(c)
 
   /** Unparsable → zero vector (gen_fp/fingerprints.py:46-54 semantics). */
   def fingerprint(c: Column, nBits: Int): Column = {

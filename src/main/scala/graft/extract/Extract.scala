@@ -66,31 +66,8 @@ object Extract {
   final case class RxnMolecules(
       reactants: Seq[String], agents: Seq[String], products: Seq[String])
 
-  /** Strings in UTF-8 byte order, which is code point order — the order
-    * Spark's `array_sort` uses. `String.compareTo` compares UTF-16 units
-    * and puts supplementary characters before U+E000–U+FFFF. */
-  private object Utf8Order extends Ordering[String] {
-    private def fix(c: Char): Int = if (c >= 0xe000) c - 0x800 else c + 0x2000
-    def compare(a: String, b: String): Int = {
-      val n = math.min(a.length, b.length)
-      var i = 0
-      while (i < n) {
-        val x = a.charAt(i); val y = b.charAt(i)
-        if (x != y)
-          return if (x >= '\ud800' && y >= '\ud800') fix(x) - fix(y) else x - y
-        i += 1
-      }
-      a.length - b.length
-    }
-  }
-
   private def sortedDistinct(xs: Iterable[String]): Seq[String] =
-    xs.toArray.distinct.sorted(Utf8Order).toSeq
-
-  /** `array_except(xs, drop)`: distinct elements of `xs` not in `drop`,
-    * first-occurrence order. */
-  private def except(xs: Seq[String], drop: Seq[String]): Seq[String] =
-    xs.iterator.filterNot(drop.contains).distinct.toSeq
+    xs.toArray.distinct.sorted(ArrayOps.Utf8Order).toSeq
 
   /** Atom-mapped-molecule test: any `:n]` atom map present
     * (extract/extractor.py:244-249 uses RDKit atom map numbers; on the
@@ -183,6 +160,8 @@ object Extract {
     (solvents, metals ++ rest)
   }
 
+  private val bareCarbon = Set("[C]", "C")
+
   /** E19 — Pd/C exception (extract/extractor.py:1024-1048): when a
     * transition metal sits among the conditions or the procedure text
     * mentions charcoal, bare carbon ("C"/"[C]") is the catalyst support,
@@ -192,16 +171,15 @@ object Extract {
     if (agents.exists(chem.containsTransitionMetal) ||
       (procedure != null &&
         procedure.toLowerCase(java.util.Locale.ROOT).contains("charcoal")))
-      except(agents, Seq("[C]", "C"))
+      ArrayOps.except(agents, bareCarbon)
     else agents
 
   /** Column form of [[pdCException]], for array columns outside the
-    * extract (the q63 registry query). */
+    * extract (the q63 registry query); a null list stays null. */
   def pdCException(agents: Column, procedure: Column, chem: Chemistry): Column =
-    when(exists(agents, a => chem.hasTransitionMetal(a)) ||
-      contains(lower(coalesce(procedure, lit(""))), lit("charcoal")),
-      array_except(agents, array(lit("[C]"), lit("C"))))
-      .otherwise(agents)
+    udf((xs: Seq[String], p: String) =>
+      if (xs == null) null else pdCException(xs, p, chem))
+      .apply(agents, procedure)
 
   /** E20 — ice defaults a missing temperature to 0 °C
     * (extract/extractor.py:432-441 ice handling). */
@@ -301,13 +279,13 @@ object Extract {
       else mergeToAgents(infoAgents,
         (labReagents ++ labSolvents ++ labCatalysts).distinct, solventSet, chem)
     // E18 — conditions must be disjoint from reactants ∪ products
-    val taken = reactants ++ products
+    val taken = (reactants ++ products).toSet
 
     Some(ReactionLists(
       r.fileName, r.rxnOrdinal, rxnStr, isMapped,
       reactants,
-      pdCException(except(agents, taken), r.procedureDetails.orNull, chem),
-      except(solvents, taken),
+      pdCException(ArrayOps.except(agents, taken), r.procedureDetails.orNull, chem),
+      ArrayOps.except(solvents, taken),
       if (cfg.trustLabelling) labReagents.distinct else Nil,
       if (cfg.trustLabelling) labCatalysts.distinct else Nil,
       products,

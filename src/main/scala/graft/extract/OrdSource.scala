@@ -1,5 +1,7 @@
 package graft.extract
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,12 +26,17 @@ object OrdSource {
 
   /** The one (path, bytes) → reactions decode both the batch and streaming
     * sources share — keeps the IncrementalExtractSpec streaming==batch
-    * invariant true by construction. */
+    * invariant true by construction. A file that does not gunzip or decode
+    * fails the job with its path in the message. */
   private def decodeFile(path: String, bytes: Array[Byte]): Seq[OrdFileReaction] = {
     val name = path.split('/').last.stripSuffix(".pb.gz")
-    OrdWire.decodeDataset(OrdWire.gunzip(bytes)).zipWithIndex.map {
-      case (r, i) => OrdFileReaction(name, i, r)
-    }
+    val reactions =
+      try OrdWire.decodeDataset(OrdWire.gunzip(bytes))
+      catch {
+        case NonFatal(e) =>
+          throw new java.io.IOException(s"cannot decode ORD file $path: $e", e)
+      }
+    reactions.zipWithIndex.map { case (r, i) => OrdFileReaction(name, i, r) }
   }
 
   /** Read every `*.pb.gz` under `dir` (2-level glob like the reference's

@@ -26,7 +26,8 @@ import scala.collection.mutable.ArrayBuffer
   * }}}
   *
   * Unknown fields are skipped by wire type — forward-compatible by
-  * construction, like any generated protobuf reader.
+  * construction, like any generated protobuf reader. A length or varint
+  * that runs past its enclosing message throws `IllegalArgumentException`.
   */
 object OrdWire {
 
@@ -48,11 +49,23 @@ object OrdWire {
 
   // ---- wire primitives -----------------------------------------------------
 
+  /** A cursor over one message, `b(i until end)`. Every length read from
+    * the wire is checked against the bytes left in the message, so corrupt
+    * input throws instead of moving the cursor backwards (a decode that
+    * never ends) or into a neighbouring message. */
   private final class Reader(val b: Array[Byte], var i: Int, val end: Int) {
     def hasNext: Boolean = i < end
+    private def corrupt(what: String): Nothing =
+      throw new IllegalArgumentException(
+        s"corrupt protobuf: $what at byte $i of a message ending at byte $end")
+    /** `n`, once it is known to fit in the rest of the message. */
+    private def fits(n: Long): Int =
+      if (n < 0 || n > end - i) corrupt(s"length $n")
+      else n.toInt
     def varint(): Long = {
       var x = 0L; var s = 0
       while (true) {
+        if (i >= end) corrupt("unterminated varint")
         val c = b(i) & 0xff; i += 1
         x |= (c & 0x7fL) << s; s += 7
         if ((c & 0x80) == 0) return x
@@ -60,29 +73,29 @@ object OrdWire {
       x
     }
     def f32(): Float = {
-      val v = java.lang.Float.intBitsToFloat(
-        (b(i) & 0xff) | (b(i + 1) & 0xff) << 8 | (b(i + 2) & 0xff) << 16 |
-          (b(i + 3) & 0xff) << 24)
-      i += 4; v
+      val p = i; i += fits(4)
+      java.lang.Float.intBitsToFloat(
+        (b(p) & 0xff) | (b(p + 1) & 0xff) << 8 | (b(p + 2) & 0xff) << 16 |
+          (b(p + 3) & 0xff) << 24)
     }
     /** Returns (fieldNumber, wireType); positions reader at the payload. */
     def tag(): (Int, Int) = { val t = varint(); ((t >> 3).toInt, (t & 7).toInt) }
     def lenDelim(): Reader = {
-      val n = varint().toInt; val r = new Reader(b, i, i + n); i += n; r
+      val n = fits(varint()); val r = new Reader(b, i, i + n); i += n; r
     }
     def str(): String = {
-      val n = varint().toInt
+      val n = fits(varint())
       val s = new String(b, i, n, java.nio.charset.StandardCharsets.UTF_8)
       i += n; s
     }
     def skip(wt: Int): Unit = wt match {
       case 0 => varint()
-      case 1 => i += 8
+      case 1 => i += fits(8)
       case 2 =>
         // NB: not `i += varint()` — Scala evaluates the lhs of `+=` before
         // the rhs, and varint() itself advances i.
-        val n = varint().toInt; i += n
-      case 5 => i += 4
+        val n = fits(varint()); i += n
+      case 5 => i += fits(4)
       case _ => i = end // malformed: stop
     }
   }
@@ -252,17 +265,16 @@ object OrdWire {
   /** Decode a full (uncompressed) Dataset message into its reactions. */
   def decodeDataset(bytes: Array[Byte]): Seq[OrdReaction] = {
     var name = ""; var dsId = ""
-    val spans = ArrayBuffer[(Int, Int)]()
+    // reactions decode after the scan: name and id may follow them
+    val reactions = ArrayBuffer[Reader]()
     val r = new Reader(bytes, 0, bytes.length)
     while (r.hasNext) r.tag() match {
       case (1, 2) => name = r.str()
       case (10, 2) => dsId = r.str()
-      case (3, 2) =>
-        val n = r.varint().toInt
-        spans += ((r.i, r.i + n)); r.i += n
+      case (3, 2) => reactions += r.lenDelim()
       case (_, wt) => r.skip(wt)
     }
-    spans.map { case (s, e) => reaction(new Reader(bytes, s, e), name, dsId) }.toSeq
+    reactions.map(reaction(_, name, dsId)).toSeq
   }
 
   def gunzip(bytes: Array[Byte]): Array[Byte] = {

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Array-column building blocks for the reference's list-valued reaction
@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   * interpreted, not code-generated, so per-row work that chains many of
   * them belongs in plain Scala (see [[graft.extract.Extract]] and
   * [[graft.operators.Cleaner]]); [[scramble]] is such a Scala function,
-  * with a Column form that wraps it.
+  * with a Column form that wraps it, and [[Utf8Order]] and [[except]] are
+  * the Scala forms of `array_sort`'s order and `array_except`.
   */
 object ArrayOps {
 
@@ -31,32 +32,6 @@ object ArrayOps {
     // try_element_at: ANSI-safe out-of-bounds → null → sentinel.
     (0 until n).map(i =>
       coalesce(try_element_at(arr, lit(i + 1)), lit(sentinel)).as(f"${prefix}_$i%03d"))
-
-  /** E21 — right-pad with nulls to length n (extract/extractor.py:416,
-    * 1041-1043: yields padded to products length). */
-  def padTo(arr: Column, n: Column): Column =
-    concat(arr, array_repeat(lit(null).cast("string"),
-      greatest(lit(0), (n - size(arr)).cast("int"))))
-
-  /** E16 — alignment-preserving filter: drop elements of `arr` failing
-    * `pred`, co-dropping the positionally-aligned `aligned` elements
-    * (extract/extractor.py:879-923: products filtered with their yields).
-    * Returns struct(kept, keptAligned).
-    */
-  def alignedFilter(arr: Column, aligned: Column, pred: Column => Column): Column = {
-    val zipped = filter(
-      zip_with(arr, aligned, (a, b) => struct(a.as("k"), b.as("v"))),
-      z => pred(z.getField("k")))
-    struct(
-      transform(zipped, z => z.getField("k")).as("kept"),
-      transform(zipped, z => z.getField("v")).as("keptAligned"))
-  }
-
-  /** E17 — stable partition: elements satisfying `keepFirst` first, the rest
-    * after, original relative order preserved (extract/extractor.py:936-1016:
-    * unresolvable names moved to the end of each list). */
-  def moveToEnd(arr: Column, toEnd: Column => Column): Column =
-    concat(filter(arr, x => !toEnd(x)), filter(arr, toEnd))
 
   /** C15 — deterministic per-row scramble: the positions of `xs` ordered
     * by md5(seed, rowKey, element, position) in hex, the position 0-based
@@ -105,6 +80,11 @@ object ArrayOps {
       a.length - b.length
     }
   }
+
+  /** `array_except(xs, drop)`: the distinct elements of `xs` not in `drop`,
+    * in first-occurrence order; null stays null. */
+  def except(xs: Seq[String], drop: Set[String]): Seq[String] =
+    if (xs == null) null else xs.distinct.filterNot(drop)
 
   /** E15 — drop elements whose text parses as a number
     * (extract/extractor.py:754-781). try_cast: ANSI-safe null-on-fail. */

@@ -45,18 +45,10 @@ object Conversions {
   def parseUsDate(c: Column): Column =
     to_date(try_to_timestamp(c, lit("MM/dd/yyyy")))
 
-  /** E24 — dataset-filename normalization + grant date
-    * (extract/extractor.py:23-26, 52-81): strip `/ : space . " '`, pull
-    * `uspto-grants-YYYY_MM` into a date. */
-  def normalizeFilename(c: Column): Column =
-    regexp_replace(c, "[/: .\"']", "")
-
+  /** E24 — grant date from the dataset filename
+    * (extract/extractor.py:52-81): `uspto-grants-YYYY_MM` into a date. */
   def grantDateFromFilename(c: Column): Column = {
     val m = regexp_extract(c, "uspto-grants-(\\d{4}_\\d{2})", 1)
     when(m =!= "", to_date(m, "yyyy_MM")) // ANSI-safe: no parse of ''
   }
-
-  /** E15 — numeric-string test (extract/extractor.py:754-781). */
-  def isNumber(c: Column): Column =
-    c.try_cast(org.apache.spark.sql.types.DoubleType).isNotNull
 }

@@ -37,11 +37,6 @@ object CleanOps {
   case object DeleteAll extends BadNameMode
   case object NullAll extends BadNameMode
 
-  /** `array_except(xs, drop)`: the distinct elements of `xs` not in `drop`,
-    * in first-occurrence order; null stays null. */
-  def except(xs: Seq[String], drop: Set[String]): Seq[String] =
-    if (xs == null) null else xs.distinct.filterNot(drop)
-
   /** C2 on one row's component lists: None drops the row, else the lists
     * after stripping. A row whose lists hold no bad name but include a null
     * list counts as unknown, so `DeleteAll` (and `NullifyIfMapped` on an
@@ -51,7 +46,7 @@ object CleanOps {
       bad: Set[String], mode: BadNameMode): Option[Seq[Seq[String]]] = {
     val clean =
       !lists.exists(l => l == null || l.exists(bad))
-    def strip = lists.map(except(_, bad))
+    def strip = lists.map(ArrayOps.except(_, bad))
     mode match {
       case DeleteAll => if (clean) Some(lists) else None
       case NullAll => Some(strip)

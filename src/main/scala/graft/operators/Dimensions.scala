@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.extract.Chemistry
@@ -21,9 +21,6 @@ object Dimensions {
       .distinct()
       .orderBy("name")
 
-  def writeNamesCsv(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
-
   /** E26 — solvents dimension: melt the three name columns, lowercase,
     * canonicalise the SMILES, yield (a) the canonical-SMILES set and (b)
     * the name→SMILES replacement map (data/solvents.py:27-69). Both are
@@ -33,7 +30,8 @@ object Dimensions {
   def loadSolvents(spark: SparkSession, csvPath: String, chem: Chemistry)
       : (Seq[String], Map[String, String]) = {
     val raw = spark.read.option("header", "true").csv(csvPath)
-      .withColumn("canon", chem.canonicalize(col("smiles")))
+      .withColumn("canon",
+        udf((s: String) => chem.canonicalString(s)).apply(col("smiles")))
       .filter(col("canon").isNotNull)
     val set = raw.select("canon").distinct()
       .collect().map(_.getString(0)).toSeq.sorted

@@ -21,17 +21,12 @@ object Fingerprints {
   def diffFp(product: Column, r0: Column, r1: Column): Column =
     zip_with(zip_with(product, r0, (a, b) => a - b), r1, (a, b) => a - b)
 
-  /** Scatter-style dense fingerprint for large bit widths: the expression
-    * formulation is O(nBits·len) per molecule (a membership probe per
-    * bit), fine at spec widths but quadratic-feeling at the reference's
-    * 2048 bits. This typed mapPartitions kernel allocates one int array
-    * per row and scatters 3-gram bucket hits — O(len + nBits), matching
-    * [[IdentityChemistry.fingerprint]] bit-for-bit (spec-locked).
-    */
+  /** One row of [[reactionFingerprintsDense]]. */
   final case class FpRow(original_index: Long, fp: Seq[Int])
 
-  /** The one scatter kernel both dense paths share — any fix here keeps
-    * them bit-identical by construction. Null → zero vector. */
+  /** The scatter kernel: one int array per molecule, 3-gram bucket hits set
+    * — O(len + nBits), matching [[graft.extract.IdentityChemistry.fingerprint]]
+    * bit-for-bit (spec-locked). Null → zero vector. */
   private def fpOf(s: String, nBits: Int): Array[Int] = {
     val fp = new Array[Int](nBits)
     if (s != null) {
@@ -45,18 +40,6 @@ object Fingerprints {
       }
     }
     fp
-  }
-
-  def denseFingerprints(df: DataFrame, smiles: Column, nBits: Int)
-      : org.apache.spark.sql.Dataset[FpRow] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[FpRow]
-    df.select(col("original_index").cast("long"), smiles.cast("string"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val s = if (r.isNullAt(1)) null else r.getString(1)
-          FpRow(r.getLong(0), fpOf(s, nBits).toSeq)
-        }
-      }
   }
 
   /** Scatter-style [[reactionFingerprints]]: computes all three molecule

@@ -130,31 +130,8 @@ class CleanOpsSpec extends SparkSpec {
     assert(join == Seq(1L, 2L, 4L)) // join path
   }
 
-  test("E16 aligned filter co-drops yields with products") {
-    val df = Seq((Seq("P1", "", "P2"), Seq(Some(10.0), Some(20.0), None: Option[Double])))
-      .toDF("products", "yields")
-    val out = df.select(
-      ArrayOps.alignedFilter(col("products"), col("yields"), p => p =!= "").as("r"))
-      .select("r.kept", "r.keptAligned").collect()(0)
-    assert(out.getSeq[String](0) == Seq("P1", "P2"))
-    assert(out.getSeq[java.lang.Double](1) == Seq(10.0, null))
-  }
-
-  test("E17 move-to-end is a stable partition") {
-    val df = Seq(Tuple1(Seq("x", "name1", "y", "name2"))).toDF("l")
-    val bad = Seq("name1", "name2")
-    val out = df.select(
-      ArrayOps.moveToEnd(col("l"), x => x.isin(bad: _*)).as("m"))
-      .as[Seq[String]].collect()(0)
-    assert(out == Seq("x", "y", "name1", "name2"))
-  }
-
   test("E21 pad + E23 wide codec round-trip") {
     val df = Seq(Tuple1(Seq("a", "b"))).toDF("l")
-    val padded = df.select(ArrayOps.padTo(col("l"), lit(4)).as("p"))
-      .as[Seq[Option[String]]].collect()(0)
-    assert(padded == Seq(Some("a"), Some("b"), None, None))
-
     val wide = df.select(ArrayOps.toWide(col("l"), "reactant", 3): _*)
     assert(wide.columns.toSeq == Seq("reactant_000", "reactant_001", "reactant_002"))
     assert(wide.collect()(0).toSeq == Seq("a", "b", "<missing>"))

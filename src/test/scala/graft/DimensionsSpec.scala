@@ -2,11 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.extract.IdentityChemistry
+import graft.extract.{IdentityChemistry, Smiles, StructuralChemistry}
 import graft.operators.Dimensions
 
 /** E25/E26/C14 — dimension builders against the reference's own packaged
-  * data files. */
+  * data files, and E26 over a small CSV written here. */
 class DimensionsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -17,6 +17,28 @@ class DimensionsSpec extends SparkSpec {
     assert(dict.size > set.size)       // several names per solvent
     assert(dict.contains("water") && dict("water") == "O")
     assert(dict.keys.forall(k => k == k.toLowerCase))
+  }
+
+  test("E26: solvents dimension from a hand-written CSV, StructuralChemistry") {
+    val dir = java.nio.file.Files.createTempDirectory("solvents")
+    val csv = dir.resolve("solvents.csv")
+    java.nio.file.Files.writeString(csv, Seq(
+      "solvent_name_1,solvent_name_2,solvent_name_3,smiles",
+      "Ethanol,EtOH,,OCC",
+      "ethyl alcohol,,,C(C)O", // an equivalent writing unifies
+      "Junk,,,nonsense(", // unparsable: the row is dropped
+      "WATER,,,O",
+      "Mixed,,,CCl",
+      "MIXED,,,CCCl" // the same name again: the last row wins
+    ).mkString("", "\n", "\n"))
+    val (set, dict) = Dimensions.loadSolvents(spark, csv.toString, StructuralChemistry)
+    def canon(s: String): String = Smiles.canonical(s).get
+    assert(canon("OCC") == canon("C(C)O"))
+    assert(set == Seq(canon("OCC"), canon("O"), canon("CCl"), canon("CCCl")).sorted)
+    assert(dict == Map(
+      "ethanol" -> canon("OCC"), "etoh" -> canon("OCC"),
+      "ethyl alcohol" -> canon("OCC"), "water" -> canon("O"),
+      "mixed" -> canon("CCCl")))
   }
 
   test("E25: molecule-name merge is sorted distinct") {

@@ -237,8 +237,8 @@ class ExtractParitySpec extends SparkSpec {
       "sodium chloride", "", null)
     val df = sample.toDF("s")
     for (chem <- Seq(IdentityChemistry, StructuralChemistry)) {
-      val got = df.select(col("s"), chem.canonicalize(col("s")),
-        chem.hasTransitionMetal(col("s"))).collect()
+      val got = df.select(col("s"), LegacyChemistry.canonicalize(chem, col("s")),
+        LegacyChemistry.hasTransitionMetal(chem, col("s"))).collect()
       got.foreach { r =>
         val s = r.getString(0)
         assert(chem.canonicalString(s) == r.getString(1), s"canonical of $s, $chem")
@@ -250,6 +250,37 @@ class ExtractParitySpec extends SparkSpec {
     assert(StructuralChemistry.canonicalString("OCC") ==
       StructuralChemistry.canonicalString("C(C)O"))
     assert(StructuralChemistry.canonicalString("sodium chloride") == null)
+  }
+
+  test("E19 Column form (q63) equals the legacy Column copy on edge cases") {
+    val cases = Seq[(Seq[String], String)](
+      (null, "over charcoal"),
+      (null, null),
+      (Seq("C", null, "[Pd]"), "stir"),
+      (Seq("C", null, "O"), "Pd on Charcoal"),
+      (Seq("C", null, "O"), "stir"),
+      (Seq("C", "C", "O", "O", "[Pd+2]"), "stir"),
+      (Seq("C", "C", "O", "O"), "stir"),
+      (Seq("[C]", "C", "O"), "Pd on ChArCoAl"),
+      (Seq("C", "[Pd+2]"), null),
+      (Seq("C", "O"), null),
+      (Seq.empty[String], "charcoal"))
+    val df = cases.toDF("agents", "proc").withColumn("i", monotonically_increasing_id())
+    for (chem <- Seq(IdentityChemistry, StructuralChemistry)) {
+      val out = df.select(col("i"),
+        Extract.pdCException(col("agents"), col("proc"), chem).as("got"),
+        LegacyColumnExtract.pdCException(col("agents"), col("proc"), chem).as("want"))
+        .orderBy("i").collect()
+      assert(out.length == cases.size)
+      out.foreach(r => assert(r.get(1) == r.get(2), s"$chem: $r"))
+      val got = out.map(r => Option(r.getSeq[String](1)))
+      assert(got(0).isEmpty && got(1).isEmpty) // a null list stays null
+      assert(got(2).contains(Seq(null, "[Pd]"))) // metal: C dropped, null kept
+      assert(got(4).contains(Seq("C", null, "O"))) // neither: untouched
+      assert(got(5).contains(Seq("O", "[Pd+2]"))) // drop branch dedups
+      assert(got(6).contains(Seq("C", "C", "O", "O"))) // keep branch does not
+      assert(got(7).contains(Seq("O")))
+    }
   }
 
   test("extract plan: no exchange and at most one higher-order function") {
@@ -265,10 +296,41 @@ class ExtractParitySpec extends SparkSpec {
   }
 }
 
+/** The Column forms of canonicalisation and the transition-metal test that
+  * the `Chemistry` trait declared before it kept only the scalars, copied
+  * here so the legacy pipeline below stays independent of the scalars it is
+  * compared with: Identity as the input itself and two `rlike` patterns,
+  * Structural as UDFs over [[Smiles]]. */
+private object LegacyChemistry {
+  private val tmSymbols = Seq(
+    "Ti", "V", "Cr", "Mn", "Fe", "Co", "Ni", "Cu",
+    "Zr", "Nb", "Mo", "Tc", "Ru", "Rh", "Pd", "Ag",
+    "Hf", "Ta", "W", "Re", "Os", "Ir", "Pt", "Au")
+  private val tmPatterns = Seq(
+    "\\[(" + tmSymbols.mkString("|") + ")[^A-Za-z]",
+    "\\[(" + tmSymbols.mkString("|") + ")\\]")
+
+  private val canonU = udf((s: String) =>
+    if (s == null) null else Smiles.canonical(s).orNull)
+  private val tmU = udf((s: String) =>
+    s != null && Smiles.hasTransitionMetalParsed(s).getOrElse(false))
+
+  def canonicalize(chem: Chemistry, c: Column): Column = chem match {
+    case IdentityChemistry => c
+    case StructuralChemistry => canonU(c)
+  }
+
+  def hasTransitionMetal(chem: Chemistry, c: Column): Column = chem match {
+    case IdentityChemistry => c.rlike(tmPatterns(0)) || c.rlike(tmPatterns(1))
+    case StructuralChemistry => tmU(c)
+  }
+}
+
 /** The Column pipeline `Extract.extractReactions` used before the
   * per-reaction function, verbatim except that `ArrayOps.exceptSet` /
   * `intersectSet` are inlined as the `array_except` / `array_intersect`
-  * they were. */
+  * they were, and the chemistry's Column forms come from
+  * [[LegacyChemistry]]. */
 private object LegacyColumnExtract {
 
   def hasMappedAtom(c: Column): Column = c.rlike(":\\d+\\]")
@@ -310,7 +372,7 @@ private object LegacyColumnExtract {
   }
 
   def pdCException(agents: Column, procedure: Column, chem: Chemistry): Column =
-    when(exists(agents, a => chem.hasTransitionMetal(a)) ||
+    when(exists(agents, a => LegacyChemistry.hasTransitionMetal(chem, a)) ||
       contains(lower(coalesce(procedure, lit(""))), lit("charcoal")),
       array_except(agents, array(lit("[C]"), lit("C"))))
       .otherwise(agents)
@@ -343,7 +405,7 @@ private object LegacyColumnExtract {
     val parts = split(rxnStr, ">", -1)
     def mols(i: Int): Column =
       filter(transform(split(parts.getItem(i), "[.]"),
-        m => chem.canonicalize(m)), m => m.isNotNull && m =!= "")
+        m => LegacyChemistry.canonicalize(chem, m)), m => m.isNotNull && m =!= "")
     val lhs = concat(mols(0), mols(1))
     val rhsRaw = mols(2)
     val mProducts = array_sort(array_distinct(
@@ -369,7 +431,8 @@ private object LegacyColumnExtract {
     val solvents = array_sort(array_intersect(all, typedLit(solventSet)))
     val agentsRaw = array_sort(array_except(all, typedLit(solventSet)))
     val keyed = transform(agentsRaw, a =>
-      struct(when(chem.hasTransitionMetal(a), 0).otherwise(1).as("k"), a.as("v")))
+      struct(when(LegacyChemistry.hasTransitionMetal(chem, a), 0).otherwise(1).as("k"),
+        a.as("v")))
     val agents = transform(array_sort(keyed), s => s.getField("v"))
     (solvents, agents)
   }

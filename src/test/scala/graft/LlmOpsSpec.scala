@@ -120,20 +120,6 @@ class LlmOpsSpec extends SparkSpec {
     assert(meta(2L)._3 == 2) // 250 bytes -> 2 frames
   }
 
-  test("scatter fingerprint matches the expression kernel bit-for-bit") {
-    import graft.extract.IdentityChemistry
-    import graft.operators.Fingerprints
-    val df = Seq((0L, "CCO"), (1L, "c1ccccc1"), (2L, "O"), (3L, null))
-      .toDF("original_index", "smiles")
-    val viaExpr = df.select(col("original_index"),
-      when(col("smiles").isNotNull, IdentityChemistry.fingerprint(col("smiles"), 64))
-        .otherwise(array_repeat(lit(0), 64)).as("fp"))
-      .as[(Long, Seq[Int])].collect().toMap
-    val viaScatter = Fingerprints.denseFingerprints(df, col("smiles"), 64)
-      .collect().map(r => r.original_index -> r.fp).toMap
-    assert(viaExpr == viaScatter)
-  }
-
   test("dense reaction fingerprint matches the expression kernel bit-for-bit") {
     import graft.extract.IdentityChemistry
     import graft.operators.Fingerprints

@@ -12,10 +12,41 @@ class StructuralChemistrySpec extends SparkSpec {
 
   test("canonicalize unifies equivalent writings at the Column level") {
     val df = Seq("OCC", "CCO", "C(C)O", "not a molecule").toDF("s")
-    val out = df.select(StructuralChemistry.canonicalize(col("s")).as("c"))
+    val canonicalize = udf((s: String) => StructuralChemistry.canonicalString(s))
+    val out = df.select(canonicalize(col("s")).as("c"))
       .as[Option[String]].collect().toSeq
     assert(out(0) == out(1) && out(1) == out(2) && out(0).isDefined)
     assert(out(3).isEmpty)
+  }
+
+  test("the memo caches fill on scalar calls and empty under a reflective reset") {
+    // the same reflection the benchmark uses to start each extract pass on
+    // cold caches: clear every java.util.Map field of the module
+    val cls = Class.forName("graft.extract.StructuralChemistry$")
+    val module = cls.getField("MODULE$").get(null)
+    def maps: Seq[java.util.Map[_, _]] =
+      cls.getDeclaredFields.toSeq
+        .filter(f => classOf[java.util.Map[_, _]].isAssignableFrom(f.getType))
+        .flatMap { f =>
+          f.setAccessible(true)
+          f.get(module) match {
+            case m: java.util.Map[_, _] => Some(m)
+            case _ => None
+          }
+        }
+    StructuralChemistry.canonicalString("CCO")
+    StructuralChemistry.containsTransitionMetal("[Pd]")
+    val filled = maps
+    // one canonical cache and one metal cache, both reachable
+    assert(filled.size == 2)
+    assert(filled.exists(_.containsKey("CCO")))
+    assert(filled.exists(_.containsKey("[Pd]")))
+    filled.foreach(_.clear())
+    assert(maps.forall(_.isEmpty))
+    // a cleared cache refills with the same answers
+    assert(StructuralChemistry.canonicalString("OCC") ==
+      StructuralChemistry.canonicalString("C(C)O"))
+    assert(StructuralChemistry.containsTransitionMetal("[Pd]"))
   }
 
   test("full golden corpus canonicalizes idempotently (55k real molecules)") {
