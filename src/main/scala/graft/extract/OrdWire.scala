@@ -27,7 +27,8 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Unknown fields are skipped by wire type — forward-compatible by
   * construction, like any generated protobuf reader. A length or varint
-  * that runs past its enclosing message throws `IllegalArgumentException`.
+  * that runs past its enclosing message, and a field of wire type 3, 4, 6
+  * or 7 (groups, or no wire type at all), throw `IllegalArgumentException`.
   */
 object OrdWire {
 
@@ -96,7 +97,9 @@ object OrdWire {
         // the rhs, and varint() itself advances i.
         val n = fits(varint()); i += n
       case 5 => i += fits(4)
-      case _ => i = end // malformed: stop
+      // 3 and 4 are the deprecated groups, which ORD does not use; 6 and 7
+      // are not wire types. Either way the field's length is unknown.
+      case _ => corrupt(s"wire type $wt")
     }
   }
 

@@ -930,11 +930,89 @@ object Smiles {
 
   // ---- canonical ranking ---------------------------------------------------
 
+  /** Dense ranks of `keys` in lexicographic order (`java.util.Arrays.compare`,
+    * a proper prefix first): equal keys share a rank, and the ranks run
+    * from 0 to the number of distinct keys minus one, with no gap. */
+  private[extract] def squash(keys: Array[Array[Int]]): Array[Int] = {
+    val n = keys.length
+    val order = Array.tabulate[Integer](n)(Integer.valueOf)
+    java.util.Arrays.sort(order,
+      (x: Integer, y: Integer) => java.util.Arrays.compare(keys(x), keys(y)))
+    val ranks = new Array[Int](n)
+    var r = 0
+    var k = 1
+    while (k < n) {
+      if (java.util.Arrays.compare(keys(order(k - 1)), keys(order(k))) != 0) r += 1
+      ranks(order(k)) = r
+      k += 1
+    }
+    ranks
+  }
+
+  /** Number of classes in dense ranks (the largest rank plus one). */
+  private def classes(ranks: Array[Int]): Int = {
+    var m = -1
+    var i = 0
+    while (i < ranks.length) { if (ranks(i) > m) m = ranks(i); i += 1 }
+    m + 1
+  }
+
+  /** Morgan refinement of the dense ranks `start` over the graph `adj`
+    * (atom -> (neighbour, bond order)), until a round no longer adds a
+    * class. Each round squashes, per atom, the key
+    * `rank, o1, r1, o2, r2, ...`: its current rank, then its neighbours'
+    * (bond order, rank) pairs in ascending order. The old rank leads the
+    * key, so a round never merges classes. Keys are exact: a hash could
+    * collide and merge distinct classes, and break canonical invariance. */
+  private[extract] def refine(adj: Vector[Vector[(Int, Int)]], start: Array[Int]): Array[Int] = {
+    val n = start.length
+    val keys = Array.tabulate(n)(a => new Array[Int](1 + 2 * adj(a).length))
+    var ranks = start
+    var distinct = classes(ranks)
+    var changed = true
+    while (changed) {
+      var a = 0
+      while (a < n) {
+        val key = keys(a)
+        key(0) = ranks(a)
+        val nb = adj(a)
+        var m = 0
+        while (m < nb.length) {
+          val (b, o) = nb(m)
+          val r = ranks(b)
+          // insertion sort: pair j sits at key(2j + 1), key(2j + 2)
+          var j = m
+          while (j > 0 && (key(2 * j - 1) > o || (key(2 * j - 1) == o && key(2 * j) > r))) {
+            key(2 * j + 1) = key(2 * j - 1); key(2 * j + 2) = key(2 * j)
+            j -= 1
+          }
+          key(2 * j + 1) = o; key(2 * j + 2) = r
+          m += 1
+        }
+        a += 1
+      }
+      val next = squash(keys)
+      val nd = classes(next)
+      changed = nd != distinct
+      ranks = next
+      distinct = nd
+    }
+    ranks
+  }
+
   /** Morgan-style refinement: start from local invariants, refine by sorted
     * neighbor (order, rank) multisets, then stereo-descriptor refinement,
     * then break residual ties deterministically on the smallest ambiguous
     * class. Returns the molecule with chemically meaningless chirality
     * flags dropped plus a canonical rank per atom.
+    *
+    * Refinement keys are int arrays compared lexicographically (see
+    * [[refine]]); the stereo rounds key each atom by (rank, chiral
+    * descriptor, E/Z descriptor) and the tie-break rounds by (rank, 0 for
+    * the lifted atom, else 1). Bond orders and descriptors are single
+    * digits and ranks stay below 10^9, so these keys sort exactly like
+    * their zero-padded decimal renderings (`SmilesRefineParitySpec` checks
+    * this against a string-keyed refinement).
     *
     * Stereo handling (the part a stereo-blind ranking gets wrong):
     *  - Each chiral atom contributes a rank-relative parity descriptor —
@@ -955,32 +1033,6 @@ object Smiles {
     */
   def canonicalAssign(mol: Mol): (Mol, Array[Int]) = {
     val n = mol.atoms.length
-    // Full strings as refinement keys — NOT 32-bit hashes, whose collisions
-    // would silently merge distinct invariant classes and break canonical
-    // invariance. Molecules are small; string keys are cheap here.
-    def squash(keys: Array[String]): Array[Int] = {
-      val idx = keys.distinct.sorted.zipWithIndex.toMap
-      keys.map(idx)
-    }
-    def refine(init: Array[String]): Array[Int] = {
-      var ranks = squash(init)
-      var distinct = ranks.distinct.length
-      var changed = true
-      while (changed) {
-        val keys = Array.tabulate(n) { a =>
-          val nb = mol.adj(a).map { case (b, o) => f"$o:${ranks(b)}%09d" }
-            .sorted.mkString(",")
-          // old rank as a fixed-width prefix: refinement never merges classes
-          f"${ranks(a)}%09d|$nb"
-        }
-        val next = squash(keys)
-        val nd = next.distinct.length
-        changed = nd != distinct
-        ranks = next
-        distinct = nd
-      }
-      ranks
-    }
     // NOTE: the raw `chiral` flag is EXCLUDED — it is only meaningful
     // relative to the written neighbor order, so two writings of the same
     // config carry different flags; stereo joins via descriptors below.
@@ -989,7 +1041,8 @@ object Smiles {
       Seq(a.elem, a.aromatic, a.isotope, a.charge, a.hCount, a.atomMap,
         mol.adj(i).length).mkString("|")
     }
-    var ranks = refine(initial)
+    val initialRank = initial.distinct.sorted.zipWithIndex.toMap
+    var ranks = refine(mol.adj, initial.map(initialRank))
     val (ezStereo, ezSide) = ezPerception(mol)
     val ezEnd: Map[Int, Int] = // stereo end atom -> its double-bond partner
       ezStereo.flatMap { case (a, b) => Seq(a -> b, b -> a) }.toMap
@@ -1057,11 +1110,11 @@ object Smiles {
     }
     var changed = mol.atoms.exists(_.chiral != 0) || ezStereo.nonEmpty
     while (changed) {
-      val desc = Array.tabulate(n)(i => s"${chiralDesc(i)}:${ezDesc(i)}")
-      if (desc.forall(_ == "0:0")) changed = false
+      val keys = Array.tabulate(n)(i => Array(ranks(i), chiralDesc(i), ezDesc(i)))
+      if (keys.forall(k => k(1) == 0 && k(2) == 0)) changed = false
       else {
-        val next = refine(Array.tabulate(n)(i => f"${ranks(i)}%09d|${desc(i)}"))
-        changed = next.distinct.length != ranks.distinct.length
+        val next = refine(mol.adj, squash(keys))
+        changed = classes(next) != classes(ranks)
         ranks = next
       }
     }
@@ -1100,14 +1153,13 @@ object Smiles {
       else b
     }
     val cleaned = Mol(cleanedAtoms, cleanedBonds, mol.nbOrder)
-    while (ranks.distinct.length < n) {
-      val tie = ranks.groupBy(identity).collect {
-        case (r, g) if g.length > 1 => r
-      }.min
-      val r = ranks.zipWithIndex.filter(_._1 == tie).map(_._2).min
-      val lifted = Array.tabulate(n)(i =>
-        f"${ranks(i)}%09d|${if (i == r) 0 else 1}")
-      ranks = refine(lifted)
+    while (classes(ranks) < n) {
+      // lift the lowest-index atom of the smallest shared rank
+      val size = new Array[Int](n)
+      ranks.foreach(r => size(r) += 1)
+      val tie = size.indexWhere(_ > 1)
+      val r = ranks.indexOf(tie)
+      ranks = refine(mol.adj, squash(Array.tabulate(n)(i => Array(ranks(i), if (i == r) 0 else 1))))
     }
     (cleaned, ranks)
   }
@@ -1202,7 +1254,7 @@ object Smiles {
     java.util.Arrays.fill(visited, false)
     val sb = new StringBuilder
     val ringOpened = mutable.Set[Int]()
-    def ringToken(num: Int): String = if (num < 10) num.toString else f"%%$num%02d"
+    def ringToken(num: Int): String = if (num < 10) num.toString else "%" + num
     def emitFrom(a: Int, from: Int, bondO: Int): Unit = {
       visited(a) = true
       if (from >= 0) {

@@ -76,6 +76,21 @@ class OrdDecodeSpec extends SparkSpec {
     assert(decode(valid.dropRight(1)).isFailure)
   }
 
+  test("wire types 3, 4, 6 and 7 throw, at the top level and inside a reaction") {
+    // byte 0 is the dataset name's tag, byte 6 the reaction's first
+    // identifier tag; both are field 1 of wire type 2
+    assert(valid(0) == 0x0A && valid(6) == 0x0A)
+    for (wt <- Seq(3, 4, 6, 7); at <- Seq(0, 6)) {
+      val b = valid.clone()
+      b(at) = (0x08 | wt).toByte
+      val r = decode(b)
+      assert(r.isFailure && r.failed.get.getMessage.contains(s"wire type $wt"), (wt, at, r))
+      val name = s"wire-type-$wt-at-$at.pb.gz"
+      val e = intercept[Exception](OrdSource.readNested(spark, dirWith(name, gzip(b)).toString).count())
+      assert(messages(e).contains(name), messages(e))
+    }
+  }
+
   test("a corrupt or truncated file fails the scan with its path") {
     val corrupt = dirWith("corrupt-length.pb.gz", gzip(negativeUnknown))
     val e1 = intercept[Exception](OrdSource.readNested(spark, corrupt.toString).count())
