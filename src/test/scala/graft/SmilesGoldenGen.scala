@@ -33,7 +33,7 @@ object SmilesGoldenGen {
   private val smilesLike = "[A-Za-z0-9@+\\-\\[\\]()=#:/\\\\%.]+"
 
   /** String literals of the specs that could be SMILES, unescaped. */
-  def literals(): Seq[String] =
+  private def literals(): Seq[String] =
     specs.flatMap { s =>
       val src = new String(Files.readAllBytes(
         Paths.get("src/test/scala/graft", s + ".scala")), UTF_8)
@@ -45,7 +45,7 @@ object SmilesGoldenGen {
   /** A random molecule: a tree of `minAtoms` to `maxAtoms` atoms, up to
     * `maxRings` ring bonds, some double bonds, random tetrahedral flags and
     * E/Z marks on the double bonds of acyclic molecules. */
-  def randomMol(rnd: Random, minAtoms: Int, maxAtoms: Int, maxRings: Int): Mol = {
+  private def randomMol(rnd: Random, minAtoms: Int, maxAtoms: Int, maxRings: Int): Mol = {
     val n = minAtoms + rnd.nextInt(maxAtoms - minAtoms + 1)
     val elems = Vector.fill(n)(Seq("C", "C", "C", "N", "O")(rnd.nextInt(5)))
     val bonds = mutable.ArrayBuffer[Bond]()
@@ -117,7 +117,7 @@ object SmilesGoldenGen {
   private def writings(mol: Mol, rnd: Random, k: Int): Seq[String] =
     (1 to k).map(_ => Smiles.emit(mol, rnd.shuffle((0 until mol.atoms.length).toList).toArray))
 
-  def inputs(): Seq[String] = {
+  private def inputs(): Seq[String] = {
     val rnd = new Random(20261020)
     val lits = literals()
     val rewritten = lits.filterNot(_.contains('.')).flatMap { s =>

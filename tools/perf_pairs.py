@@ -64,6 +64,10 @@ def quartiles(xs):
     return q[0], q[2]
 
 
+def cell(median, q1, q3):
+    return f"{median:.4g} [{q1:.4g}, {q3:.4g}]"
+
+
 def digests(checkout, workload, seed):
     path = os.path.join(checkout, ".bench_build", "perfbench", "digests",
                         f"{workload}-seed{seed}.txt")
@@ -108,7 +112,7 @@ def main():
     failed = {s: sum(1 for r in runs[s] if value(r, metrics[0]["name"]) is None) for s in runs}
     print(f"\n{a.workload}: {len(seeds)} pairs, failed runs parent={failed['parent']} "
           f"change={failed['change']}")
-    print(f"{'metric':28} {'parent median [q1, q3]':>32} {'change median [q1, q3]':>32} "
+    print(f"{'metric':28} {'parent median [q1, q3]':>34} {'change median [q1, q3]':>34} "
           f"{'wins':>5} {'loss':>5} {'tie':>4}  verdict")
     for m in metrics:
         name, lower = m["name"], m["better"] == "lower"
@@ -131,9 +135,8 @@ def main():
             worse = (cm - pm) / pm if lower else (pm - cm) / pm
             if worse > bound:
                 verdict += f", WORSE by {worse:.1%} > bound {bound:.0%}"
-        print(f"{name:28} {pm:12.4g} [{p1:.4g}, {p3:.4g}]".ljust(61) +
-              f" {cm:12.4g} [{c1:.4g}, {c3:.4g}]".ljust(33) +
-              f" {wins:5} {losses:5} {len(pairs) - wins - losses:4}  {verdict}")
+        print(f"{name:28} {cell(pm, p1, p3):>34} {cell(cm, c1, c3):>34} "
+              f"{wins:5} {losses:5} {len(pairs) - wins - losses:4}  {verdict}")
 
     print("\ndigests per seed:")
     bad = 0
