@@ -5,7 +5,8 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
-import graft.extract.OrdWire.{CompoundId, InputEntry, Product, RxnIdentifier}
+import graft.extract.OrdSource.NestedReaction
+import graft.extract.OrdWire.{CompoundId, RxnIdentifier}
 import graft.functions.{ArrayOps, Conversions}
 
 /** E1–E23 — the extraction pipeline (SURVEY.md §2.2) over the nested
@@ -36,17 +37,6 @@ final case class ExtractConfig(
     useLabellingIfExtractFails: Boolean = true)
 
 object Extract {
-
-  /** The fields of one [[OrdSource.readNested]] row that the extract reads. */
-  final case class NestedReaction(
-      fileName: String, rxnOrdinal: Int,
-      identifiers: Seq[RxnIdentifier],
-      inputs: Seq[InputEntry],
-      products: Seq[Product],
-      tempValue: Option[Double], tempUnits: Int, tempControl: Int,
-      timeValue: Option[Double], timeUnits: Int,
-      procedureDetails: Option[String],
-      experimentStart: Option[String])
 
   /** One reaction after the list-valued steps, with the raw scalar fields
     * the Column stage still converts. `agents` is before E15. */

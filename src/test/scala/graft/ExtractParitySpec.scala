@@ -2,7 +2,7 @@ package graft
 
 import scala.util.Random
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
@@ -46,9 +46,9 @@ class ExtractParitySpec extends SparkSpec {
       temp: (Option[Double], Int, Int) = (None, 0, 0),
       time: (Option[Double], Int) = (None, 0),
       procedure: Option[String] = None, start: Option[String] = None) =
-    OrdSource.OrdFileReaction(file, i, OrdReaction("ds", "id", rxnIds,
+    OrdSource.NestedReaction(file, i, "ds", "id", rxnIds,
       inputs.zipWithIndex.map { case (cs, k) => InputEntry(s"in$k", cs) },
-      products, temp._1, temp._2, temp._3, time._1, time._2, procedure, start))
+      products, temp._1, temp._2, temp._3, time._1, time._2, procedure, start)
 
   /** One case per branch of the extract. */
   private val handMade = Seq(
@@ -107,7 +107,7 @@ class ExtractParitySpec extends SparkSpec {
     reaction("f1", 12, Nil, Nil, Nil))
 
   /** Seeded random reactions over a vocabulary of the same tricky forms. */
-  private def randomReactions(n: Int, seed: Long): Seq[OrdSource.OrdFileReaction] = {
+  private def randomReactions(n: Int, seed: Long): Seq[OrdSource.NestedReaction] = {
     val r = new Random(seed)
     val vocab = Vector("CCO", "OCC", "C(C)O", "O", "[Pd]", "[Pd+2]", "Cl[Pd]Cl",
       "[Fe]", "[Cu]", "C", "[C]", "[H][H]", "c1ccccc1", "CC(=O)O", "[Na+]",
@@ -155,9 +155,7 @@ class ExtractParitySpec extends SparkSpec {
   }
 
   /** Rows in [[OrdSource.readNested]]'s shape. */
-  private def nestedOf(rs: Dataset[OrdSource.OrdFileReaction]): DataFrame =
-    rs.toDF().select(col("fileName"), col("rxnOrdinal"), col("r.*"))
-  private def nestedOf(rs: Seq[OrdSource.OrdFileReaction]): DataFrame = nestedOf(rs.toDS())
+  private def nestedOf(rs: Seq[OrdSource.NestedReaction]): DataFrame = rs.toDS().toDF()
 
   private lazy val nested = nestedOf(handMade ++ randomReactions(400, 7L)).cache()
 
@@ -218,9 +216,9 @@ class ExtractParitySpec extends SparkSpec {
   test("a streaming nested frame takes the same per-reaction path") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq = spark.sqlContext
-    val mem = MemoryStream[OrdSource.OrdFileReaction]
+    val mem = MemoryStream[OrdSource.NestedReaction]
     mem.addData(handMade: _*)
-    val q = Extract.extractReactions(nestedOf(mem.toDS()), ExtractConfig(),
+    val q = Extract.extractReactions(mem.toDF(), ExtractConfig(),
       IdentityChemistry, solvents)
       .writeStream.format("memory").queryName("spec_extract_stream")
       .outputMode(OutputMode.Append).start()

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path}
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
-import scala.util.Try
+import scala.util.{Random, Try}
 
 import graft.extract.{OrdSource, OrdWire}
 import graft.extract.OrdWire.{OrdReaction, RxnIdentifier}
@@ -33,13 +33,6 @@ class OrdDecodeSpec extends SparkSpec {
     * test instead of hanging the suite. */
   private def decode(b: Array[Byte]): Try[Seq[OrdReaction]] =
     Await.result(Future(Try(OrdWire.decodeDataset(b))), 10.seconds)
-
-  private def gzip(b: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    val z = new java.util.zip.GZIPOutputStream(out)
-    z.write(b); z.close()
-    out.toByteArray
-  }
 
   private def dirWith(name: String, content: Array[Byte]): Path = {
     val dir = Files.createTempDirectory("ord")
@@ -86,20 +79,51 @@ class OrdDecodeSpec extends SparkSpec {
       val r = decode(b)
       assert(r.isFailure && r.failed.get.getMessage.contains(s"wire type $wt"), (wt, at, r))
       val name = s"wire-type-$wt-at-$at.pb.gz"
-      val e = intercept[Exception](OrdSource.readNested(spark, dirWith(name, gzip(b)).toString).count())
+      val dir = dirWith(name, OrdWireWriter.gzip(b))
+      val e = intercept[Exception](OrdSource.readNested(spark, dir.toString).count())
       assert(messages(e).contains(name), messages(e))
     }
   }
 
   test("a corrupt or truncated file fails the scan with its path") {
-    val corrupt = dirWith("corrupt-length.pb.gz", gzip(negativeUnknown))
+    val corrupt = dirWith("corrupt-length.pb.gz", OrdWireWriter.gzip(negativeUnknown))
     val e1 = intercept[Exception](OrdSource.readNested(spark, corrupt.toString).count())
     assert(messages(e1).contains("corrupt-length.pb.gz"), messages(e1))
-    val whole = gzip(valid)
+    val whole = OrdWireWriter.gzip(valid)
     val cut = dirWith("cut-short.pb.gz", whole.take(whole.length / 2))
     val e2 = intercept[Exception](OrdSource.readNested(spark, cut.toString).count())
     assert(messages(e2).contains("cut-short.pb.gz"), messages(e2))
     // the same valid bytes, whole, still read
     assert(OrdSource.readNested(spark, dirWith("whole.pb.gz", whole).toString).count() == 1)
+  }
+
+  test("seeded round trip: encode, gzip, gunzip and decode give the reactions back") {
+    for (seed <- 0L until 200L) {
+      val rng = new Random(seed)
+      val rs = Seq.fill(rng.nextInt(12))(OrdFixtures.randomReaction(rng, s"ds$seed", s"id$seed"))
+      val b = OrdWireWriter.gzip(OrdWireWriter.dataset(s"ds$seed", s"id$seed", rs))
+      assert(OrdWire.decodeDataset(OrdWire.gunzip(b)) == rs, s"seed $seed")
+    }
+    // the hand-written bytes above are what the encoder writes
+    assert(OrdWireWriter.dataset("ds", "id", decode(valid).get) sameElements valid)
+  }
+
+  test("a directory with no *.pb.gz file fails naming the directory and the glob") {
+    val empty = Files.createTempDirectory("ord-empty")
+    val other = dirWith("notes.pb", OrdWireWriter.gzip(valid))
+    Files.write(other.resolve("_hidden.pb.gz"), OrdWireWriter.gzip(valid))
+    Files.write(other.resolve(".hidden.pb.gz"), OrdWireWriter.gzip(valid))
+    for (dir <- Seq(empty, other)) {
+      val e = intercept[IllegalArgumentException](OrdSource.readNested(spark, dir.toString))
+      assert(e.getMessage.contains(dir.toString) && e.getMessage.contains("*.pb.gz"),
+        e.getMessage)
+    }
+  }
+
+  test("a missing directory fails with Spark's PATH_NOT_FOUND, naming it") {
+    val missing = Files.createTempDirectory("ord-gone").resolve("no-such-dir")
+    val e = intercept[Exception](OrdSource.readNested(spark, missing.toString))
+    assert(messages(e).contains("PATH_NOT_FOUND") && messages(e).contains(missing.toString),
+      messages(e))
   }
 }

@@ -689,4 +689,23 @@ class PlanSpec extends SparkSpec {
       .explainString(ExplainMode.fromString("formatted"))
     assert(!p.contains("Exchange"), "extract should not shuffle:\n" + p)
   }
+
+  test("extract pipeline over generated ORD files is a single narrow projection " +
+      "(no exchange, no deserialize between scan and extract)") {
+    val dir = java.nio.file.Files.createTempDirectory("ord-plan")
+    val files = OrdFixtures.writeSkewedDir(dir, 3L, files = 6, reactions = 60)
+    val nested = graft.extract.OrdSource.readNested(spark, dir.toString)
+    val extracted = graft.extract.Extract.extractReactions(
+      nested, graft.extract.ExtractConfig(), graft.extract.IdentityChemistry,
+      Seq("O", "CO"))
+    val qe = extracted.queryExecution
+    val p = qe.explainString(ExplainMode.fromString("formatted"))
+    assert(!p.contains("Exchange"), "extract should not shuffle:\n" + p)
+    val deserialize = qe.optimizedPlan.collect {
+      case d: org.apache.spark.sql.catalyst.plans.logical.DeserializeToObject => d
+    }
+    assert(deserialize.isEmpty, "scan rows should reach the extract as objects:\n" +
+      qe.optimizedPlan)
+    assert(extracted.count() == files.map(_._2.size).sum)
+  }
 }
