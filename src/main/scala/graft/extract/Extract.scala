@@ -1,5 +1,7 @@
 package graft.extract
 
+import java.time.LocalDate
+
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders}
@@ -9,20 +11,24 @@ import graft.extract.OrdSource.NestedReaction
 import graft.extract.OrdWire.{CompoundId, RxnIdentifier}
 import graft.functions.{ArrayOps, Conversions}
 
-/** E1–E23 — the extraction pipeline (SURVEY.md §2.2) over the nested
+/** E1–E24 — the extraction pipeline (SURVEY.md §2.2) over the nested
   * reaction rows produced by [[OrdSource.readNested]]. The reference walks
   * each reaction in Python (extract/extractor.py:595-1073
-  * `handle_reaction_object`); here the list-valued steps (E1–E5, E3
-  * participation, E11, E12, E18, E19, E21, include-unadded, ice) are one
-  * compiled Scala function per reaction, applied as a typed map, and the
-  * scalar conversions (E6/E7/E9/E15/E20/E24) are Column expressions on top
-  * of it. The whole extract is one narrow stage — no shuffle at all until
-  * the sink.
+  * `handle_reaction_object`); here every step is one compiled Scala
+  * function per reaction, [[extractReaction]], applied as a typed
+  * `flatMap` from [[OrdSource.NestedReaction]] straight to the output row
+  * type [[ExtractedReaction]]: the list-valued steps (E1–E5, E3
+  * participation, E11, E12, E18, E19, E21, include-unadded, ice) and the
+  * scalar conversions (E6/E7/E9/E15/E20/E24, plain functions in
+  * [[graft.functions.Conversions]]) alike. The whole extract is one narrow
+  * stage — no shuffle at all until the sink — and its optimized plan is
+  * `SerializeFromObject ← MapPartitions ← ExternalRDD` over the batch scan.
   *
-  * Why not one Column tree: Spark's higher-order array functions
+  * Why not Column expressions: Spark's higher-order array functions
   * (`transform`, `filter`, `exists`, …) are interpreted, not code-generated,
-  * and a per-reaction tree of them re-reads the same nested structs many
-  * times and costs more to plan than to run.
+  * a per-reaction tree of them re-reads the same nested structs many times,
+  * and every Column stage on top of the map is analysed and optimized again
+  * on each call, which cost a quarter of a warm extract pass.
   *
   * Chemistry-dependent steps (canonicalisation, the transition-metal test)
   * go through a [[Chemistry]] instance's scalar methods; with
@@ -38,19 +44,21 @@ final case class ExtractConfig(
 
 object Extract {
 
-  /** One reaction after the list-valued steps, with the raw scalar fields
-    * the Column stage still converts. `agents` is before E15. */
-  final case class ReactionLists(
-      fileName: String, rxnOrdinal: Int,
+  /** One output row of the extract: the fields are the output columns, in
+    * their order, with their types and nullability. `reagents` and
+    * `catalysts` are empty and dropped from the output unless
+    * `trustLabelling`. */
+  final case class ExtractedReaction(
+      extracted_from_file: String, rxnOrdinal: Int,
       rxn_str: String, is_mapped: Boolean,
       reactants: Seq[String], agents: Seq[String], solvents: Seq[String],
       reagents: Seq[String], catalysts: Seq[String],
       products: Seq[String], yields: Seq[Option[Double]],
-      ice: Boolean,
-      tempValue: Option[Double], tempUnits: Int, tempControl: Int,
-      timeValue: Option[Double], timeUnits: Int,
-      procedureDetails: Option[String],
-      experimentStart: Option[String])
+      temperature: Option[Double], rxn_time: Option[Double],
+      procedure_details: String,
+      date_of_experiment: LocalDate, grant_date: LocalDate)
+
+  private val extractedEncoder = Encoders.product[ExtractedReaction]
 
   /** Reactants, agents and products read off a reaction string (E3). */
   final case class RxnMolecules(
@@ -76,11 +84,6 @@ object Extract {
   /** Spark's `split(s, "[.]")`: limit -1, so trailing empty strings stay
     * (`String.split(regex)` alone would drop them). */
   private def splitDots(s: String): Array[String] = s.split("\\.", -1)
-
-  /** `round(x, 2)`: HALF_UP through the decimal form, as Spark's `round`. */
-  private def round2(x: Double): Double =
-    if (x.isNaN || x.isInfinite) x
-    else BigDecimal(x).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** E1 — first SMILES identifier of an identifier list, else (optionally)
     * its NAME (extract/extractor.py:112-158); null when neither exists. */
@@ -173,8 +176,15 @@ object Extract {
 
   /** E20 — ice defaults a missing temperature to 0 °C
     * (extract/extractor.py:432-441 ice handling). */
+  def iceTemperature(temperature: Option[Double], ice: Boolean): Option[Double] =
+    if (temperature.isEmpty && ice) Some(0.0) else temperature
+
+  /** Column form of [[iceTemperature]], for the q64 registry query: a null
+    * `ice` reads as false. */
   def iceTemperature(temperature: Column, ice: Column): Column =
-    coalesce(temperature, when(ice, lit(0.0)))
+    udf((t: java.lang.Double, i: java.lang.Boolean) =>
+      iceTemperature(Option(t).map(_.doubleValue), i != null && i.booleanValue))
+      .apply(temperature, ice)
 
   /** E4 ice detection: an "ice" / "ice water" identifier among the inputs.
     * Only ASCII letters lower-case to ASCII, so other lengths never match. */
@@ -193,14 +203,16 @@ object Extract {
       if (v == null) x else v
     }
 
-  /** The list-valued steps for one reaction (the paper's default path is
+  /** Every extract step for one reaction (the paper's default path is
     * extractor.py:689-780 branch trust_labelling=False): rxn-string
     * reactants/products when a valid string exists, labelled conditions
-    * merged to solvents/agents, E18/E19/E21 cleanups applied. None when
-    * the reaction is dropped (no reaction string and
-    * `useLabellingIfExtractFails = false`, extractor.py:734-735). */
-  def reactionLists(r: NestedReaction, cfg: ExtractConfig, chem: Chemistry,
-      solventSet: Set[String], replacements: Map[String, String]): Option[ReactionLists] = {
+    * merged to solvents/agents, E18/E19/E21 cleanups and E15 applied, and
+    * the E6/E7/E9/E20/E24 scalars converted. None when the reaction is
+    * dropped (no reaction string and `useLabellingIfExtractFails = false`,
+    * extractor.py:734-735). */
+  def extractReaction(r: NestedReaction, cfg: ExtractConfig, chem: Chemistry,
+      solventSet: Set[String], replacements: Map[String, String],
+      dates: Conversions.Dates): Option[ExtractedReaction] = {
     val ident = r.identifiers.reverseIterator.find(_.itype == 6).orNull
     val rxnStr = rxnString(ident)
     val isMapped = rxnStr != null && ident.isMapped
@@ -235,7 +247,7 @@ object Extract {
       if (first != null)
         splitDots(first).sortBy(s => -s.codePointCount(0, s.length))
           .iterator.zipWithIndex.foreach { case (part, i) =>
-            labProducts += part -> (if (i == 0) p.yieldPct.map(round2) else None)
+            labProducts += part -> (if (i == 0) p.yieldPct.map(Conversions.round2) else None)
           }
     }
     val labProductSmiles = labProducts.map(_._1).toSeq
@@ -271,54 +283,45 @@ object Extract {
     // E18 — conditions must be disjoint from reactants ∪ products
     val taken = (reactants ++ products).toSet
 
-    Some(ReactionLists(
+    Some(ExtractedReaction(
       r.fileName, r.rxnOrdinal, rxnStr, isMapped,
       reactants,
-      pdCException(ArrayOps.except(agents, taken), r.procedureDetails.orNull, chem),
+      // E15 — drop numeric-string "molecules"
+      pdCException(ArrayOps.except(agents, taken), r.procedureDetails.orNull, chem)
+        .filterNot(Conversions.isNumeric),
       ArrayOps.except(solvents, taken),
       if (cfg.trustLabelling) labReagents.distinct else Nil,
       if (cfg.trustLabelling) labCatalysts.distinct else Nil,
       products,
       // E11/E5 — yields re-aligned onto the final products by equality scan
       products.map(p => labProducts.find(_._1 == p).flatMap(_._2)),
-      ice,
-      r.tempValue, r.tempUnits, r.tempControl, r.timeValue, r.timeUnits,
-      r.procedureDetails, r.experimentStart))
+      // E6 — temperature to °C, then E20: ice defaults it to 0 °C
+      iceTemperature(
+        Conversions.temperatureToCelsius(r.tempValue, r.tempUnits, r.tempControl), ice),
+      // E7 — reaction time to hours
+      Conversions.rxnTimeToHours(r.timeValue, r.timeUnits),
+      r.procedureDetails.orNull,
+      // E9 — experiment date; E24 — grant date from the file name
+      dates.parseUsDate(r.experimentStart.orNull),
+      dates.grantDate(r.fileName)))
   }
 
-  /** Full extraction: [[reactionLists]] per reaction, then the scalar
-    * conversions as Column expressions. Output: array-typed reaction table
-    * (SURVEY.md §7.1 internal model).
+  /** Full extraction: [[extractReaction]] per reaction, as one typed
+    * `flatMap` whose row type is the output. Output: array-typed reaction
+    * table (SURVEY.md §7.1 internal model), `reagents`/`catalysts` after
+    * `solvents` only under `trustLabelling`. Dates are read in the session
+    * time zone.
     */
   def extractReactions(nested: DataFrame, cfg: ExtractConfig,
       chem: Chemistry, solventSet: Seq[String],
       replacements: Map[String, String] = Map.empty): DataFrame = {
     val solvents = solventSet.toSet
-    val lists = nested.as(Encoders.product[NestedReaction])
-      .flatMap(r => reactionLists(r, cfg, chem, solvents, replacements))(
-        Encoders.product[ReactionLists])
-
-    val roleCols =
-      if (cfg.trustLabelling) Seq(col("reagents"), col("catalysts"))
-      else Seq.empty
-    lists.select(Seq(
-      col("fileName").as("extracted_from_file"), col("rxnOrdinal"),
-      col("rxn_str"), col("is_mapped"), col("reactants"),
-      // E15 — drop numeric-string "molecules"
-      ArrayOps.dropNumeric(col("agents")).as("agents"),
-      col("solvents")) ++ roleCols ++ Seq(
-      col("products"), col("yields"),
-      // E6/E7 — unit conversions; E20 — ice defaults temperature to 0°C
-      iceTemperature(Conversions.temperatureToCelsius(
-        col("tempValue"), col("tempUnits"), col("tempControl")), col("ice"))
-        .as("temperature"),
-      Conversions.rxnTimeToHours(col("timeValue"), col("timeUnits"))
-        .as("rxn_time"),
-      col("procedureDetails").as("procedure_details"),
-      // E9 — experiment date
-      Conversions.parseUsDate(col("experimentStart")).as("date_of_experiment"),
-      // E24 — grant date from filename
-      Conversions.grantDateFromFilename(col("fileName")).as("grant_date")): _*)
+    val dates = Conversions.Dates.session()
+    val out = nested.as(OrdSource.nestedEncoder)
+      .flatMap(r => extractReaction(r, cfg, chem, solvents, replacements, dates))(
+        extractedEncoder)
+      .toDF()
+    if (cfg.trustLabelling) out else out.drop("reagents", "catalysts")
   }
 
   /** E23 — numbered-wide sink view with the reference's sentinel/column

@@ -42,6 +42,12 @@ object OrdSource {
       procedureDetails: Option[String],
       experimentStart: Option[String])
 
+  /** Built once: deriving a product encoder walks the case class by Scala
+    * reflection, which is slow enough to show in a warm pass's planning. */
+  private[graft] val nestedEncoder = Encoders.product[NestedReaction]
+
+  private val pathAndBytes = Encoders.tuple(Encoders.STRING, Encoders.BINARY)
+
   private val glob = "*.pb.gz"
 
   /** The one (path, bytes) → reactions decode both the batch and streaming
@@ -127,7 +133,7 @@ object OrdSource {
         decodeFile(file, bytes)
       }
     }
-    spark.createDataset(rdd)(Encoders.product[NestedReaction])
+    spark.createDataset(rdd)(nestedEncoder)
   }
 
   /** The nested DataFrame view (FIXTURES.md §1 Spark ingest type). */
@@ -158,9 +164,8 @@ object OrdSource {
       .option("recursiveFileLookup", "true")
       .load(dir)
       .select(col("path"), col("content"))
-      .as(Encoders.tuple(Encoders.STRING, Encoders.BINARY))
-      .flatMap { case (path, bytes) => decodeFile(path, bytes) }(
-        Encoders.product[NestedReaction])
+      .as(pathAndBytes)
+      .flatMap { case (path, bytes) => decodeFile(path, bytes) }(nestedEncoder)
       .toDF()
 
   /** Incremental extract job: drain all unseen `.pb.gz` files under `inDir`

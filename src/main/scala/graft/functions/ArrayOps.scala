@@ -86,11 +86,6 @@ object ArrayOps {
   def except(xs: Seq[String], drop: Set[String]): Seq[String] =
     if (xs == null) null else xs.distinct.filterNot(drop)
 
-  /** E15 — drop elements whose text parses as a number
-    * (extract/extractor.py:754-781). try_cast: ANSI-safe null-on-fail. */
-  def dropNumeric(arr: Column): Column =
-    filter(arr, x => x.try_cast(org.apache.spark.sql.types.DoubleType).isNull)
-
   /** E10 — broadcast replacements-dict lookup with identity default
     * (extract/extractor.py:501-516; dict at extract/defaults.py:42-151).
     * The map ships as a literal (→ broadcast to every task); at 100 TB this

@@ -152,40 +152,37 @@ class CleanOpsSpec extends SparkSpec {
   }
 
   test("E15 numeric strings dropped") {
-    val df = Seq(Tuple1(Seq("12", "abc", "3.5", "x1"))).toDF("l")
-    assert(df.select(ArrayOps.dropNumeric(col("l")).as("l"))
-      .as[Seq[String]].collect()(0) == Seq("abc", "x1"))
+    val l = Seq("12", "abc", "3.5", "x1")
+    assert(l.filterNot(Conversions.isNumeric) == Seq("abc", "x1"))
   }
 
   test("E6/E7 unit conversions match the reference's tables") {
     // extract/extractor.py:423-474 golden cases
-    val df = Seq(
+    val out = Seq(
       (212.0, 2, 0),   // F -> 100 C
       (300.0, 3, 0),   // K -> 26.85 C
       (0.0, 0, 6),     // ICE_BATH -> 0
       (0.0, 0, 9),     // DRY_ICE -> -78.5
       (0.0, 0, 11)     // LIQ_N2 -> -196
-    ).toDF("v", "unit", "ctrl")
-    val out = df.select(Conversions.temperatureToCelsius(col("v"), col("unit"), col("ctrl")))
-      .as[Double].collect()
+    ).map { case (v, unit, ctrl) => Conversions.temperatureToCelsius(Some(v), unit, ctrl).get }
     assert(math.abs(out(0) - 100.0) < 1e-9)
     assert(math.abs(out(1) - 26.85) < 1e-9)
     assert(out(2) == 0.0 && out(3) == -78.5 && out(4) == -196.0)
 
-    val t = Seq((90.0, 2), (7200.0, 3), (2.0, 4), (1.5, 1)).toDF("v", "unit")
-    val hrs = t.select(Conversions.rxnTimeToHours(col("v"), col("unit"))).as[Double].collect()
-    assert(hrs.toSeq == Seq(1.5, 2.0, 48.0, 1.5))
+    val hrs = Seq((90.0, 2), (7200.0, 3), (2.0, 4), (1.5, 1))
+      .map { case (v, unit) => Conversions.rxnTimeToHours(Some(v), unit).get }
+    assert(hrs == Seq(1.5, 2.0, 48.0, 1.5))
   }
 
+  private val dates = new Conversions.Dates(java.time.ZoneId.of("UTC"))
+
   test("E9 date parse coerces invalid to null") {
-    val df = Seq("03/01/1997", "13/45/1997", "garbage").toDF("s")
-    val out = df.select(Conversions.parseUsDate(col("s"))).collect().map(_.get(0))
+    val out = Seq("03/01/1997", "13/45/1997", "garbage").map(dates.parseUsDate)
     assert(out(0) != null && out(1) == null && out(2) == null)
   }
 
   test("E24 filename normalization + grant date") {
-    val df = Seq("uspto-grants-1995_11.pb.gz").toDF("f")
-    val g = df.select(Conversions.grantDateFromFilename(col("f"))).collect()(0).getDate(0)
+    val g = dates.grantDate("uspto-grants-1995_11.pb.gz")
     assert(g.toString == "1995-11-01")
   }
 }

@@ -1,8 +1,10 @@
 package graft
 
+import java.time.ZoneId
+
 import scala.util.Random
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
@@ -15,7 +17,10 @@ import graft.functions.{ArrayOps, Conversions}
 /** The per-reaction Scala extract against the Column pipeline it replaced,
   * on in-memory nested rows (no reference data needed). The old pipeline
   * is kept verbatim below as [[LegacyColumnExtract]]; every config and both
-  * chemistries must give the same table row for row.
+  * chemistries must give the same table row for row. The scalar
+  * conversions are checked on edge inputs against the Column forms the
+  * extract used for them, kept verbatim in [[LegacyConversions]], and the
+  * output schema against the projection those forms ran in.
   *
   * Spark semantics the Scala side has to reproduce, each exercised below:
   *  - `split(s, "[.]")` uses limit -1 and keeps trailing empty strings
@@ -27,6 +32,8 @@ import graft.functions.{ArrayOps, Conversions}
   *  - `round(double, 2)` rounds HALF_UP through `BigDecimal` (2.675 → 2.68).
   *  - `coalesce(element_at(dict, x), x)` keeps `x` when the replacement
   *    value is null.
+  *  - `try_cast(s as double)` trims, takes Java's literal forms and the
+  *    `inf`/`nan` words; `MM/dd/yyyy` parses strictly.
   */
 class ExtractParitySpec extends SparkSpec {
   import spark.implicits._
@@ -281,14 +288,157 @@ class ExtractParitySpec extends SparkSpec {
     }
   }
 
-  test("extract plan: no exchange and at most one higher-order function") {
+  private val utc = ZoneId.of("UTC")
+  private val dates = new Conversions.Dates(utc)
+
+  /** Bit-equal doubles (NaN equals NaN, -0.0 differs from 0.0), null-safe. */
+  private def sameDouble(a: Any, b: Any): Boolean = (a, b) match {
+    case (x: Double, y: Double) =>
+      java.lang.Double.doubleToLongBits(x) == java.lang.Double.doubleToLongBits(y)
+    case _ => a == b
+  }
+
+  test("E15 scalar numeric test equals try_cast on edge strings") {
+    val edge = Seq(" 1", "1 ", "\t1", "1d", "1f", "0x1p3", "1_000", "+1", ".5", "5.",
+      "1e400", "NaN", "nan", "inf", "-Infinity", "\uff11", "", "1,5", "1e", "0b1",
+      "\u00a01", "1\n", null,
+      // beside the list: signs, words, SMILES starting like numbers or words
+      "-", "+", " ", "+inf", "-nan", "+NaN", "INF", " Infinity ", "Infinityx", "iNf",
+      "N", "n1ccccc1", "I", "In", "1.5e3", "5", "-0", "0x", "0x1", "1e-400", "++1",
+      "\u0000 1", "1\u0000", "CCO", "[Na+]", ".", "..5", "1.2.3", "0X1P-2")
+    val r = new Random(5L)
+    val alphabet = "0123456789.+-eExXpPdDfFnNaAiItTyY \t_"
+    val fuzz = Seq.fill(3000)(
+      Seq.fill(1 + r.nextInt(6))(alphabet(r.nextInt(alphabet.length))).mkString)
+    val strings = edge ++ fuzz
+    val want = strings.toDF("s")
+      .select(col("s").try_cast(org.apache.spark.sql.types.DoubleType).isNotNull)
+      .as[Boolean].collect().toSeq
+    strings.zip(want).foreach { case (str, w) =>
+      assert(Conversions.isNumeric(str) == w, s"'$str'")
+    }
+    // E15 as the extract applies it: the oracle's array filter
+    val agents = Seq(Tuple1(edge))
+    assert(agents.toDF("l").select(LegacyConversions.dropNumeric(col("l")))
+      .as[Seq[String]].collect()(0) == edge.filterNot(Conversions.isNumeric))
+  }
+
+  test("E9 scalar date parse equals to_date(try_to_timestamp) on edge strings") {
+    val strings = Seq("2/3/2020", "02/30/2020", " 02/03/2020", "02/03/2020 10:00",
+      "03/15/2011", "12/31/1999", "02/29/2020", "02/29/2019", "13/01/2020",
+      "00/10/2020", "bad date", "", "2020-02-03", "02/03/20", "02/03/02020",
+      "02/03/2020 ", null)
+    for (zone <- Seq("UTC", "America/Sao_Paulo", "Pacific/Kiritimati")) {
+      val prev = spark.conf.get("spark.sql.session.timeZone")
+      spark.conf.set("spark.sql.session.timeZone", zone)
+      try {
+        val want = strings.toDF("s")
+          .select(LegacyConversions.parseUsDate(col("s")).as("d"))
+          .collect().map(r => Option(r.getDate(0)).map(_.toLocalDate).orNull).toSeq
+        val zoned = Conversions.Dates.session()
+        strings.zip(want).foreach { case (str, w) =>
+          assert(zoned.parseUsDate(str) == w, s"'$str' in $zone")
+        }
+        // the q22 Column form wraps the same scalar
+        val viaUdf = strings.toDF("s").select(Conversions.parseUsDate(col("s")))
+          .collect().map(r => Option(r.getDate(0)).map(_.toLocalDate).orNull).toSeq
+        assert(viaUdf == want, zone)
+      } finally spark.conf.set("spark.sql.session.timeZone", prev)
+    }
+    assert(dates.parseUsDate("2/3/2020") == null) // strict MM/dd (see CHANGES.md)
+    assert(dates.parseUsDate("03/15/2011") == java.time.LocalDate.of(2011, 3, 15))
+  }
+
+  test("E6/E7/E20 scalars equal the Column forms on every unit and control code") {
+    val values = Seq(None, Some(Double.NaN), Some(Double.PositiveInfinity),
+      Some(Double.NegativeInfinity), Some(70.0), Some(-40.0), Some(2.675),
+      Some(-0.0), Some(-0.004), Some(1e300), Some(90.0))
+    val inputs = for (v <- values; unit <- 0 to 5; ctrl <- 0 to 11; ice <- Seq(false, true))
+      yield (v, unit, ctrl, ice)
+    val got = inputs.toDF("v", "unit", "ctrl", "ice").select(
+      LegacyColumnExtract.iceTemperature(
+        LegacyConversions.temperatureToCelsius(col("v"), col("unit"), col("ctrl")),
+        col("ice")),
+      LegacyConversions.rxnTimeToHours(col("v"), col("unit"))).collect()
+    assert(got.length == inputs.size)
+    inputs.zip(got).foreach { case ((v, unit, ctrl, ice), row) =>
+      val temp = Extract.iceTemperature(Conversions.temperatureToCelsius(v, unit, ctrl), ice)
+      val time = Conversions.rxnTimeToHours(v, unit)
+      assert(sameDouble(temp.getOrElse(null), row.get(0)),
+        s"temperature of $v, $unit, $ctrl, $ice")
+      assert(sameDouble(time.getOrElse(null), row.get(1)), s"time of $v, $unit")
+    }
+    // the q64 Column form wraps the same scalar; a null ice reads as false
+    val q64 = Seq[(Option[Double], Option[Boolean])]((None, Some(true)),
+      (None, Some(false)), (None, None), (Some(5.0), Some(true)), (Some(Double.NaN), None))
+    val viaUdf = q64.toDF("t", "ice")
+      .select(Extract.iceTemperature(col("t"), col("ice")),
+        LegacyColumnExtract.iceTemperature(col("t"), col("ice"))).collect()
+    viaUdf.foreach(r => assert(sameDouble(r.get(0), r.get(1)), r.toString))
+  }
+
+  test("E24 scalar grant date equals the Column form, and names a bad file") {
+    val names = Seq("uspto-grants-1995_11", "uspto-grants-2016_07-0",
+      "x-uspto-grants-2016_07.pb.gz", "uspto-grants-16_07", "uspto-grants-2016_7",
+      "Uspto-grants-2016_07", "uspto-grants-2016_071", "uspto-grants-\uff12016_07",
+      "uspto-grants-1976_01uspto-grants-2016_13", "ord_dataset-0b70410902ae", "", null)
+    val want = names.toDF("f")
+      .select(LegacyConversions.grantDateFromFilename(col("f")))
+      .collect().map(r => Option(r.getDate(0)).map(_.toLocalDate).orNull).toSeq
+    names.zip(want).foreach { case (n, w) => assert(dates.grantDate(n) == w, s"'$n'") }
+    assert(dates.grantDate("uspto-grants-1995_11") == java.time.LocalDate.of(1995, 11, 1))
+    for (bad <- Seq("uspto-grants-2016_13", "uspto-grants-2016_00")) {
+      // the Column form failed the whole query without naming the file
+      intercept[Exception](Seq(bad).toDF("f")
+        .select(LegacyConversions.grantDateFromFilename(col("f"))).collect())
+      val e = intercept[IllegalArgumentException](dates.grantDate(bad))
+      assert(e.getMessage.contains(bad) && e.getMessage.contains(bad.takeRight(7)),
+        e.getMessage)
+    }
+  }
+
+  test("E24: an ORD file with a bad YYYY_MM fails the extract naming it") {
+    val dir = java.nio.file.Files.createTempDirectory("ord-grant")
+    try {
+      val good = OrdFixtures.writeSkewedDir(dir, 21L, files = 3, reactions = 40)
+      val extracted = Extract.extractReactions(OrdSource.readNested(spark, dir.toString),
+        ExtractConfig(), IdentityChemistry, solvents)
+      val grants = extracted.select("grant_date").distinct().collect().map(_.getDate(0))
+      assert(grants.map(_.toLocalDate).toSeq == Seq(java.time.LocalDate.of(2016, 7, 1)))
+      assert(extracted.count() == good.map(_._2.size).sum)
+
+      val rs = Seq(OrdFixtures.randomReaction(new Random(3L), "bad", "bad-id"))
+      java.nio.file.Files.write(dir.resolve("uspto-grants-2016_13.pb.gz"),
+        OrdWireWriter.gzip(OrdWireWriter.dataset("bad", "bad-id", rs)))
+      val e = intercept[Exception](Extract.extractReactions(
+        OrdSource.readNested(spark, dir.toString), ExtractConfig(), IdentityChemistry,
+        solvents).collect())
+      val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toSeq
+      assert(messages.exists(m => m.contains("uspto-grants-2016_13") && m.contains("2016_13")),
+        messages.mkString("\n"))
+    } finally scala.reflect.io.Directory(dir.toFile).deleteRecursively()
+  }
+
+  for ((name, (cfg, repl)) <- configs)
+    test(s"$name: extract schema equals the list-map + Column projection's") {
+      val got = Extract.extractReactions(nested, cfg, IdentityChemistry, solvents, repl)
+      val want = LegacyConversions.project(
+        spark.emptyDataset(org.apache.spark.sql.Encoders.product[LegacyConversions.ReactionLists]),
+        cfg)
+      // names, order, types and nullability, element nullability included
+      assert(got.schema == want.schema, s"\n${got.schema.treeString}\n${want.schema.treeString}")
+      assert(got.schema.json == want.schema.json)
+    }
+
+  test("extract plan: no exchange and no higher-order function") {
     val extracted = Extract.extractReactions(nestedOf(handMade), ExtractConfig(),
       IdentityChemistry, solvents)
     val qe = extracted.queryExecution
     val hofs = qe.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
       case h: HigherOrderFunction => h
     }))
-    assert(hofs.size <= 1, hofs.mkString("\n"))
+    assert(hofs.isEmpty, hofs.mkString("\n"))
     val p = qe.explainString(ExplainMode.fromString("formatted"))
     assert(!p.contains("Exchange"), "extract should not shuffle:\n" + p)
   }
@@ -504,15 +654,15 @@ private object LegacyColumnExtract {
         concat(col("reactants"), col("products_raw"))))
       .withColumn("agents_pre",
         pdCException(col("agents_pre"), col("procedureDetails"), chem))
-      .withColumn("agents", ArrayOps.dropNumeric(col("agents_pre")))
-      .withColumn("temperature", Conversions.temperatureToCelsius(
+      .withColumn("agents", LegacyConversions.dropNumeric(col("agents_pre")))
+      .withColumn("temperature", LegacyConversions.temperatureToCelsius(
         col("tempValue"), col("tempUnits"), col("tempControl")))
       .withColumn("temperature", iceTemperature(col("temperature"), icePresent))
-      .withColumn("rxn_time", Conversions.rxnTimeToHours(
+      .withColumn("rxn_time", LegacyConversions.rxnTimeToHours(
         col("timeValue"), col("timeUnits")))
       .withColumn("date_of_experiment",
-        Conversions.parseUsDate(col("experimentStart")))
-      .withColumn("grant_date", Conversions.grantDateFromFilename(col("fileName")))
+        LegacyConversions.parseUsDate(col("experimentStart")))
+      .withColumn("grant_date", LegacyConversions.grantDateFromFilename(col("fileName")))
       .withColumn("yields", transform(col("products_raw"), p =>
         try_element_at(
           filter(col("lab_products"), lp => lp.getField("smiles") === p), lit(1))
@@ -531,5 +681,77 @@ private object LegacyColumnExtract {
       col("temperature"), col("rxn_time"),
       col("procedureDetails").as("procedure_details"),
       col("date_of_experiment"), col("grant_date")): _*)
+  }
+}
+
+/** The extract's scalar conversions as the Column forms it used before they
+  * became Scala functions (`Conversions.temperatureToCelsius`,
+  * `rxnTimeToHours`, `parseUsDate`, `grantDateFromFilename`,
+  * `ArrayOps.dropNumeric`), verbatim, and the projection they ran in over
+  * the list map's row type `ReactionLists` (also verbatim): the oracle of
+  * the scalars and of the output schema. */
+private object LegacyConversions {
+
+  final case class ReactionLists(
+      fileName: String, rxnOrdinal: Int,
+      rxn_str: String, is_mapped: Boolean,
+      reactants: Seq[String], agents: Seq[String], solvents: Seq[String],
+      reagents: Seq[String], catalysts: Seq[String],
+      products: Seq[String], yields: Seq[Option[Double]],
+      ice: Boolean,
+      tempValue: Option[Double], tempUnits: Int, tempControl: Int,
+      timeValue: Option[Double], timeUnits: Int,
+      procedureDetails: Option[String],
+      experimentStart: Option[String])
+
+  def temperatureToCelsius(value: Column, unit: Column, controlType: Column): Column =
+    when(unit === 1, value)
+      .when(unit === 2, (value - 32) * 5 / 9)
+      .when(unit === 3, value - lit(273.15))
+      .when(controlType === 2, lit(25.0))
+      .when(controlType === 6, lit(0.0))
+      .when(controlType === 9, lit(-78.5))
+      .when(controlType === 11, lit(-196.0))
+
+  def rxnTimeToHours(value: Column, unit: Column): Column =
+    round(
+      when(unit === 1, value)
+        .when(unit === 2, value / 60)
+        .when(unit === 3, value / 3600)
+        .when(unit === 4, value * 24), 2)
+
+  def parseUsDate(c: Column): Column =
+    to_date(try_to_timestamp(c, lit("MM/dd/yyyy")))
+
+  def grantDateFromFilename(c: Column): Column = {
+    val m = regexp_extract(c, "uspto-grants-(\\d{4}_\\d{2})", 1)
+    when(m =!= "", to_date(m, "yyyy_MM")) // ANSI-safe: no parse of ''
+  }
+
+  def dropNumeric(arr: Column): Column =
+    filter(arr, x => x.try_cast(org.apache.spark.sql.types.DoubleType).isNull)
+
+  def project(lists: Dataset[ReactionLists], cfg: ExtractConfig): DataFrame = {
+    val roleCols =
+      if (cfg.trustLabelling) Seq(col("reagents"), col("catalysts"))
+      else Seq.empty
+    lists.select(Seq(
+      col("fileName").as("extracted_from_file"), col("rxnOrdinal"),
+      col("rxn_str"), col("is_mapped"), col("reactants"),
+      // E15 — drop numeric-string "molecules"
+      dropNumeric(col("agents")).as("agents"),
+      col("solvents")) ++ roleCols ++ Seq(
+      col("products"), col("yields"),
+      // E6/E7 — unit conversions; E20 — ice defaults temperature to 0°C
+      LegacyColumnExtract.iceTemperature(temperatureToCelsius(
+        col("tempValue"), col("tempUnits"), col("tempControl")), col("ice"))
+        .as("temperature"),
+      rxnTimeToHours(col("timeValue"), col("timeUnits"))
+        .as("rxn_time"),
+      col("procedureDetails").as("procedure_details"),
+      // E9 — experiment date
+      parseUsDate(col("experimentStart")).as("date_of_experiment"),
+      // E24 — grant date from filename
+      grantDateFromFilename(col("fileName")).as("grant_date")): _*)
   }
 }

@@ -17,12 +17,11 @@ class GoldenExtractCasesSpec extends SparkSpec {
 
   private val ordDir = "/root/reference/orderly/data/test_data/ord_test_data"
 
-  private lazy val nested = OrdSource.readNested(spark, ordDir)
-    .withColumn("temperature", Conversions.temperatureToCelsius(
-      col("tempValue"), col("tempUnits"), col("tempControl")))
-    .withColumn("rxn_time", Conversions.rxnTimeToHours(
-      col("timeValue"), col("timeUnits")))
-    .select("fileName", "rxnOrdinal", "temperature", "rxn_time")
+  private lazy val nested = OrdSource.readReactions(spark, ordDir)
+    .map(r => (r.fileName, r.rxnOrdinal,
+      Conversions.temperatureToCelsius(r.tempValue, r.tempUnits, r.tempControl),
+      Conversions.rxnTimeToHours(r.timeValue, r.timeUnits)))
+    .toDF("fileName", "rxnOrdinal", "temperature", "rxn_time")
     .cache()
 
   private def scalarAt(file: String, idx: Int, c: String): Option[Double] =

@@ -708,4 +708,32 @@ class PlanSpec extends SparkSpec {
       qe.optimizedPlan)
     assert(extracted.count() == files.map(_._2.size).sum)
   }
+
+  test("extract over generated ORD files is one typed map: no higher-order function, " +
+      "nothing between the map and its serializer") {
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    import org.apache.spark.sql.catalyst.plans.logical._
+    val dir = java.nio.file.Files.createTempDirectory("ord-plan-map")
+    OrdFixtures.writeSkewedDir(dir, 4L, files = 3, reactions = 30)
+    for (trust <- Seq(false, true)) {
+      val extracted = graft.extract.Extract.extractReactions(
+        graft.extract.OrdSource.readNested(spark, dir.toString),
+        graft.extract.ExtractConfig(trustLabelling = trust),
+        graft.extract.IdentityChemistry, Seq("O", "CO"))
+      val plan = extracted.queryExecution.optimizedPlan
+      val hofs = plan.flatMap(_.expressions.flatMap(_.collect {
+        case h: HigherOrderFunction => h
+      }))
+      assert(hofs.isEmpty, hofs.mkString("\n"))
+      plan match {
+        case SerializeFromObject(_, _: MapPartitions) =>
+        case _ => fail(s"trustLabelling=$trust: want SerializeFromObject <- " +
+          s"MapPartitions <- ExternalRDD:\n$plan")
+      }
+      assert(plan.children.head.children.map(_.getClass.getSimpleName) ==
+        Seq("ExternalRDD"), plan)
+      assert(plan.collect { case p: Project => p }.isEmpty, plan)
+      assert(extracted.columns.contains("reagents") == trust)
+    }
+  }
 }
